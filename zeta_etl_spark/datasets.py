@@ -56,10 +56,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df
     return spark.read.parquet(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (mirrors the DuckDB oracle
-    environment, where the same names are pre-registered)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,11 +1,9 @@
-"""Window-function operators: cumulative sums, time-range rolling windows,
-rank leaderboards, share-of-total, top-k per group, rank change.
+"""Window-function operators: cumulative sums, rank leaderboards,
+share-of-total, top-k per group, distributed global row numbers.
 
 Reference parity (SURVEY.md §2.5):
 - W1 cumsum: zetadex-transactions-helius-pipeline.py:1048-1055
-- W2 time-range rolling: zetadex-transactions-helius-pipeline.py:845-853
 - W5 rank leaderboards: zetadex-transactions-helius-pipeline.py:1525-1545
-- W6 rank change: zetadex-transactions-helius-pipeline.py:1664-1694
 - W7 row_number top-1: zetadex-transactions-helius-pipeline.py:1942-1945
 - W10 share-of-total: zetadex-rewards-v2-pipeline.py:105-107
 
@@ -43,33 +41,6 @@ def cumsum(
     determinism — include a unique tie-break column)."""
     w = ordered_window(partition, order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
-    )
-    return df.withColumn(
-        alias, F.sum(F.col(value).cast(_DEC)).over(w).cast("double")
-    )
-
-
-def rolling_time_sum(
-    df: DataFrame,
-    value: str,
-    ts: str,
-    partition: Sequence[str],
-    duration_seconds: int,
-    alias: str,
-    epoch_col: str | None = None,
-) -> DataFrame:
-    """Trailing time-range sum (``rangeBetween(-duration, 0)`` over epoch
-    seconds) — the 24h/7d/30d rolling pattern (W2).  Inclusive frame start,
-    matching the reference's ``days(-1), 0`` bounds."""
-    epoch = (
-        F.col(epoch_col)
-        if epoch_col
-        else F.col(ts).cast("timestamp").cast("long")
-    )
-    w = (
-        Window.partitionBy(*partition)
-        .orderBy(epoch)
-        .rangeBetween(-duration_seconds, 0)
     )
     return df.withColumn(
         alias, F.sum(F.col(value).cast(_DEC)).over(w).cast("double")
@@ -118,21 +89,6 @@ def share_of_total(
     w = Window.partitionBy(*partition)
     total = F.sum(F.col(value).cast(_DEC)).over(w).cast("double")
     return df.withColumn(alias, F.col(value) / F.nullif(total, F.lit(0.0)))
-
-
-def rank_change(
-    df: DataFrame,
-    rank_col: str,
-    partition: Sequence[str],
-    order: Sequence[str | Column],
-    lookback_rows: int,
-    alias: str,
-) -> DataFrame:
-    """W6: -(rank - first(rank) over a trailing window) — positive = improved."""
-    w = ordered_window(partition, order).rowsBetween(
-        -lookback_rows, Window.currentRow
-    )
-    return df.withColumn(alias, -(F.col(rank_col) - F.first(rank_col).over(w)))
 
 
 def global_row_number(

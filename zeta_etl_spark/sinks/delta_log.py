@@ -22,13 +22,16 @@ Implemented subset (spec-true where implemented, strict where not):
   (schemaString = Spark StructType JSON — the exact representation the
   spec prescribes), ``add`` (with partitionValues, size, stats
   numRecords), ``remove``, ``commitInfo``.
-- commit atomicity: version N commits by put-if-absent creation of
-  ``_delta_log/N.json`` (atomic hard-link of a fully-written temp file —
-  the spec's requirement on filesystems with atomic rename/link).  A
-  lost race re-reads the snapshot and retries: blind appends always
-  merge; an overwrite retries its remove-set against the new snapshot
-  (last-overwrite-wins, Delta's WriteSerializable outcome for
-  non-conflicting transactions).
+- commit atomicity: every commit goes through :func:`_commit`, the one
+  optimistic-commit path.  It pins the latest version N, replays that
+  snapshot once, runs the writer-protocol gate on it, lets the operation
+  build its actions from it, and commits N+1 by put-if-absent creation
+  of ``_delta_log/<N+1>.json`` (atomic hard-link of a fully-written temp
+  file — the spec's requirement on filesystems with atomic rename/link).
+  A lost race discards what the attempt staged and rebuilds on the new
+  snapshot: blind appends always merge; an overwrite recomputes its
+  remove-set (last-overwrite-wins, Delta's WriteSerializable outcome for
+  non-conflicting transactions); DML and OPTIMIZE re-read and rewrite.
 - reads: log replay from the newest checkpoint (or version 0 when none
   exists — ``_last_checkpoint`` absent is valid per spec), snapshot or
   time-travel ``version=``.  Data files are scanned in ONE
@@ -96,8 +99,9 @@ Implemented subset (spec-true where implemented, strict where not):
   (reader 2 / writer 5).  id-mode files carry parquet field ids
   (top-level; nested id-mode writes refuse loudly).
 - writer-protocol validation: before ANY commit to an existing table,
-  the declared minWriterVersion / writerFeatures must be inside the
-  implemented subset (``_check_writer_protocol``); ``delta.appendOnly``
+  the declared minWriterVersion / writerFeatures of the snapshot being
+  committed on must be inside the implemented subset
+  (``_check_writer_protocol``); ``delta.appendOnly``
   gates data-removing operations, and declared invariants / CHECK
   constraints / generated-column expressions — which this engine does
   not evaluate — refuse loudly instead of committing violating rows.
@@ -136,7 +140,8 @@ import re
 import time
 import urllib.parse
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,8 +159,8 @@ _CHECKPOINT_MP_RE = re.compile(
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 # latest-snapshot protocol per table, refreshed by every full _replay of
-# the newest version (which every write path performs in its attempt
-# loop right before committing) — lets the commit choke point apply
+# the newest version (which _commit performs on each attempt before
+# committing) — lets the commit choke point apply
 # feature obligations (rowTracking id assignment) without re-replaying
 _SNAPSHOT_PROTOCOL: dict[str, dict] = {}
 
@@ -232,9 +237,8 @@ def _stamp_in_commit_timestamp(
                 enabled = False
     if not enabled:
         return actions
-    ci = next((a for a in actions if "commitInfo" in a), None)
-    if ci is None:
-        ci = {"commitInfo": {"timestamp": int(time.time() * 1000)}}
+    # every commit carries one commitInfo (_commit builds it)
+    ci = next(a for a in actions if "commitInfo" in a)
     actions = [ci] + [a for a in actions if a is not ci]
     if "inCommitTimestamp" not in ci["commitInfo"]:
         ict = int(time.time() * 1000)
@@ -266,9 +270,9 @@ def _assign_row_ids(
     is exactly how row ids stay stable across DV commits.
 
     Activation detection: this commit's own protocol action when
-    present, else the latest-snapshot protocol every write path's
-    attempt-loop replay already cached (_SNAPSHOT_PROTOCOL) — no extra
-    replay on the hot path.  Returns NEW action dicts — the caller's
+    present, else the latest-snapshot protocol :func:`_commit`'s replay
+    already cached (_SNAPSHOT_PROTOCOL) — no extra replay on the hot
+    path.  Returns NEW action dicts — the caller's
     list is never mutated, so an OCC retry re-allocates from the fresh
     mark instead of re-using ids a race winner may have consumed."""
     fresh = [
@@ -435,6 +439,100 @@ def _write_commit_atomic(table: str, version: int, actions: list[dict]) -> bool:
         return False
     finally:
         os.unlink(tmp)
+
+
+class _Snapshot(NamedTuple):
+    """One replayed version: what a commit attempt builds on."""
+
+    version: int
+    protocol: dict | None
+    meta: dict
+    live: dict[str, dict]
+    txns: dict[str, int]
+    domains: dict[str, dict]
+
+
+class _Done(NamedTuple):
+    """An attempt's final result that commits nothing (a no-op, a txn
+    replay, a merge whose clauses changed no row)."""
+
+    value: object
+
+
+class _Actions(NamedTuple):
+    """An attempt's proposed commit: the actions that follow commitInfo
+    and its operationParameters.  ``staged`` (add/cdc actions) and
+    ``staged_paths`` (deletion-vector files) are what THIS attempt wrote
+    — a lost race discards them.  ``result`` maps the committed version
+    to the caller's return value; ``info`` adds commitInfo fields."""
+
+    actions: list[dict]
+    params: dict
+    staged: Sequence[dict] = ()
+    staged_paths: Sequence[str] = ()
+    result: Callable[[int], object] | None = None
+    info: dict | None = None
+
+
+def _commit(
+    table: str,
+    operation: str,
+    attempt: Callable[[_Snapshot | None], _Actions | _Done],
+    max_retries: int,
+    *,
+    name: str | None = None,
+    removes_data: bool = False,
+    moves_rows: bool = False,
+    noop: Callable[[_Snapshot], bool] | None = None,
+    create: bool = False,
+):
+    """The module's one optimistic commit.  Each attempt pins the latest
+    version v (with ``create``, a missing table pins "no table yet" and
+    commits version 0), replays that one snapshot, returns v when
+    ``noop`` says the change is already in place, runs the writer-
+    protocol gate on the snapshot, and asks ``attempt`` for the commit.
+    A single commitInfo leads the actions; they land at v+1 by put-if-
+    absent (:func:`_write_commit_atomic`, which also stamps ICT and
+    assigns row ids).  A lost race discards the attempt's staged files
+    and rebuilds on the fresh snapshot; ``max_retries`` losses raise.
+    ``name`` labels the gate's and the race's errors (default:
+    ``operation``, the commitInfo operation)."""
+    name = name or operation
+    for _ in range(max_retries):
+        try:
+            v = latest_version(table)
+        except FileNotFoundError:
+            if not create:
+                raise
+            v, snap = -1, None
+        else:
+            snap = _Snapshot(v, *_replay(table, v, with_domains=True))
+            if noop is not None and noop(snap):
+                return v
+            _check_writer_protocol(
+                snap.protocol, snap.meta, name,
+                removes_data=removes_data, moves_rows=moves_rows,
+            )
+        out = attempt(snap)
+        if isinstance(out, _Done):
+            return out.value
+        info = {
+            "timestamp": int(time.time() * 1000),
+            "operation": operation,
+            "operationParameters": out.params,
+            "engineInfo": "zeta-etl-spark delta_log",
+            **(out.info or {}),
+        }
+        if _write_commit_atomic(
+            table, v + 1, [{"commitInfo": info}, *out.actions]
+        ):
+            return out.result(v + 1) if out.result else v + 1
+        _discard_staged(table, out.staged)
+        for p in out.staged_paths:
+            os.unlink(p)
+    raise DeltaConcurrentModification(
+        f"{name} lost the commit race {max_retries} times: {table}"
+    )
 
 
 def _checkpoint_files(table: str) -> dict[int, list[str]]:
@@ -1643,6 +1741,8 @@ def write_delta(
     ident_persisted: list[DataFrame] = []
     if existing:
         protocol, meta, _, _ = _replay(table)
+        # refuse before staging anything; _commit gates again on the
+        # snapshot the write actually commits to
         _check_writer_protocol(
             protocol, meta, "write_delta",
             removes_data=(mode == "overwrite"),
@@ -1812,22 +1912,9 @@ def write_delta(
     adds = _stage_data_files(stage_df, table, stage_pcols, drop_empty=True)
     for _p in ident_persisted:  # staged: the assigned ids are on disk
         _p.unpersist()
-    commit_info = {
-        "commitInfo": {
-            "timestamp": int(time.time() * 1000),
-            "operation": "WRITE",
-            "operationParameters": {
-                "mode": mode.upper(),
-                "partitionBy": json.dumps(partition_by),
-            },
-            "engineInfo": "zeta-etl-spark delta_log",
-        }
-    }
 
-    for _ in range(max_retries):
-        versions = _list_versions(table)
-        version = (versions[-1] + 1) if versions else 0
-        actions: list[dict] = [commit_info]
+    def attempt(snap: _Snapshot | None) -> _Actions:
+        actions: list[dict] = []
         if txn is not None:
             actions.append(
                 {
@@ -1838,7 +1925,7 @@ def write_delta(
                     }
                 }
             )
-        if version == 0:
+        if snap is None:
             if staging_meta is not None:
                 # mapped creation: reader 2 / writer 5, the legacy
                 # column-mapping protocol delta-spark declares;
@@ -1887,7 +1974,6 @@ def write_delta(
             # committing them under the winner's metaData would make
             # every column read NULL (name-mode resolution is by
             # physical name).  Loud error, staged files discarded.
-            _discard_staged(table, adds)
             raise DeltaConcurrentModification(
                 "lost the mapped-table creation race — the staged "
                 f"physical layout was never committed; retry: {table}"
@@ -1897,9 +1983,8 @@ def write_delta(
             # to the metaData read above — a concurrent schema/config
             # change would silently misalign physical names, so it is a
             # loud retry-the-write error, never a silent merge
-            _, meta_now, _, _ = _replay(table)
-            if meta_now["schemaString"] != mapped_meta["schemaString"] or (
-                (meta_now.get("configuration") or {})
+            if snap.meta["schemaString"] != mapped_meta["schemaString"] or (
+                (snap.meta.get("configuration") or {})
                 != (mapped_meta.get("configuration") or {})
             ):
                 raise DeltaUnsupported(
@@ -1910,15 +1995,14 @@ def write_delta(
             if staging_meta is not mapped_meta:  # evolution this write
                 actions.append({"metaData": staging_meta})
         else:
-            # metaData recomputed against the CURRENT snapshot EVERY
-            # attempt: a retry after a lost race must not commit a
-            # schema built from a stale read — a concurrent writer may
-            # have evolved the table, and clobbering its metaData would
-            # silently orphan its columns (the frame's data files are
+            # metaData recomputed against the snapshot EVERY attempt: a
+            # retry after a lost race must not commit a schema built
+            # from a stale read — a concurrent writer may have evolved
+            # the table, and clobbering its metaData would silently
+            # orphan its columns (the frame's data files are
             # unaffected: absent columns read as NULL)
-            _, meta_now, _, _ = _replay(table)
             now_schema = StructType.fromJson(
-                json.loads(meta_now["schemaString"])
+                json.loads(snap.meta["schemaString"])
             )
             now_types = {f.name: f.dataType for f in now_schema}
             conflicts = sorted(
@@ -1952,7 +2036,7 @@ def write_delta(
                 actions.append(
                     {
                         "metaData": {
-                            **meta_now,
+                            **snap.meta,
                             "schemaString": target_struct.json(),
                         }
                     }
@@ -1964,23 +2048,19 @@ def write_delta(
             # writer advanced the mark since, our values may collide —
             # loud error (the caller re-runs and re-generates), never a
             # silent duplicate-id commit.
-            if version != 0:
-                _, meta_cur, _, _ = _replay(table)
-                cur = _identity_cols(meta_cur["schemaString"])
+            if snap is not None:
+                cur = _identity_cols(snap.meta["schemaString"])
                 moved = sorted(
                     c
                     for c in identity_hwms
                     if (cur.get(c) or {}).get("hwm") != ident[c]["hwm"]
                 )
                 if moved:
-                    _discard_staged(table, adds)
                     raise DeltaConcurrentModification(
                         f"identity high-water mark of {moved} moved "
                         "concurrently — generated values could collide; "
                         f"retry the write: {table}"
                     )
-            else:
-                meta_cur = None
             patched = False
             for a in actions:
                 if "metaData" in a:
@@ -1992,46 +2072,46 @@ def write_delta(
                 actions.append(
                     {
                         "metaData": _patch_identity_hwm(
-                            meta_cur, identity_hwms
+                            snap.meta, identity_hwms
                         )
                     }
                 )
-        if version != 0 and mode == "overwrite":
-            # remove-set computed against the CURRENT snapshot each retry
-            # (a lost race means someone else's files are now live)
-            _, _, live, _ = _replay(table)
-            ts = int(time.time() * 1000)
-            actions.extend(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                    }
-                }
-                for p in sorted(live)
-            )
+        if snap is not None and mode == "overwrite":
+            # remove-set computed against the snapshot each attempt (a
+            # lost race means someone else's files are now live)
+            actions += _removes(snap.live)
         actions.extend(adds)
-        if _write_commit_atomic(table, version, actions):
-            # the spec's periodic checkpoint policy (delta defaults to
-            # every 10 commits): keeps log replay O(interval) for
-            # long-lived append streams.  Skipping versions between
-            # interval marks is fine — the NEWEST checkpoint wins.
-            if checkpoint_interval and version > 0 and (
-                version % checkpoint_interval == 0
-            ):
-                # the COMMIT above already succeeded: a checkpoint that
-                # cannot be written (an unsupported foreign feature in
-                # the snapshot) is skipped, never surfaced as a failure
-                # of the append itself
-                try:
-                    write_checkpoint(table, version)
-                except DeltaUnsupported:
-                    pass
-            return version
-    raise DeltaConcurrentModification(
-        f"lost the commit race {max_retries} times: {table}"
-    )
+        return _Actions(
+            actions,
+            {
+                "mode": mode.upper(),
+                "partitionBy": json.dumps(partition_by),
+            },
+        )
+
+    try:
+        version = _commit(
+            table, "WRITE", attempt, max_retries, name="write_delta",
+            removes_data=(mode == "overwrite"), create=True,
+        )
+    except (DeltaConcurrentModification, DeltaUnsupported):
+        _discard_staged(table, adds)  # refused or raced: committed nowhere
+        raise
+    # the spec's periodic checkpoint policy (delta defaults to every 10
+    # commits): keeps log replay O(interval) for long-lived append
+    # streams.  Skipping versions between interval marks is fine — the
+    # NEWEST checkpoint wins.
+    if checkpoint_interval and version > 0 and (
+        version % checkpoint_interval == 0
+    ):
+        # the COMMIT above already succeeded: a checkpoint that cannot
+        # be written (an unsupported foreign feature in the snapshot) is
+        # skipped, never surfaced as a failure of the append itself
+        try:
+            write_checkpoint(table, version)
+        except DeltaUnsupported:
+            pass
+    return version
 
 
 def version_at_timestamp(table: str, timestamp_ms: int) -> int:
@@ -2887,6 +2967,24 @@ def _discard_staged(table: str, actions: list[dict]) -> None:
             os.unlink(staged)
 
 
+def _removes(
+    files: dict[str, dict], data_change: bool = True
+) -> list[dict]:
+    """One ``remove`` action per file (path -> its add action)."""
+    ts = int(time.time() * 1000)
+    return [
+        {
+            "remove": {
+                "path": p,
+                "deletionTimestamp": ts,
+                "dataChange": data_change,
+                "partitionValues": a.get("partitionValues"),
+            }
+        }
+        for p, a in sorted(files.items())
+    ]
+
+
 def optimize(
     spark: SparkSession,
     table: str,
@@ -2909,33 +3007,36 @@ def optimize(
 
     ``where={partition_col: value, ...}`` scopes the rewrite to the
     matching hive partitions (Delta's ``OPTIMIZE ... WHERE`` — partition
-    predicates only): untouched partitions keep their files, and a
-    concurrent commit to an UNRELATED partition does not force a
-    re-rewrite.
+    predicates only): untouched partitions keep their files.
 
-    OCC: if another writer commits to the optimized scope while the
-    rewrite runs, the staged files are discarded and the whole rewrite
-    re-runs against the new snapshot (an OPTIMIZE must only remove files
-    it actually read).  Returns the committed version."""
-    zorder_by = list(zorder_by)
-    for _ in range(max_retries):
-        protocol, meta, live, _, domains = _replay(
-            table, with_domains=True
-        )
-        # dataChange:false removes are compaction, legal on appendOnly
-        _check_writer_protocol(
-            protocol, meta, "OPTIMIZE", moves_rows=True
-        )
+    OCC: the rewrite reads one pinned snapshot and commits directly on
+    top of it; if another writer commits first, the staged files are
+    discarded and the whole rewrite re-runs against the new snapshot (an
+    OPTIMIZE must only remove files it actually read, with the deletion
+    vectors it read).  Returns the committed version."""
+
+    def attempt(snap: _Snapshot) -> _Actions | _Done:
+        meta, live = snap.meta, snap.live
         mapping = _column_mapping(meta)
         l2p = mapping[1] if mapping else {}
-        if not zorder_by and "delta.clustering" in domains:
+        schema = StructType.fromJson(json.loads(meta["schemaString"]))
+        types = {f.name: f.dataType.simpleString() for f in schema}
+
+        def _zorderable(c: str) -> bool:
+            return types.get(c) in _Z_TYPES or (
+                types.get(c) or ""
+            ).startswith("decimal(")
+
+        zcols = list(zorder_by)
+        if not zcols and "delta.clustering" in snap.domains:
             # clusteredTable (Liquid-clustered) tables declare their
             # clustering columns in the delta.clustering domain —
             # OPTIMIZE without explicit columns clusters on THOSE, the
             # feature's writer obligation.  The domain stores PHYSICAL
             # name paths on mapped tables; translate back to logical.
             cfg = json.loads(
-                domains["delta.clustering"].get("configuration") or "{}"
+                snap.domains["delta.clustering"].get("configuration")
+                or "{}"
             )
             p2l = {p: l for l, p in l2p.items()}
             declared = [
@@ -2947,30 +3048,15 @@ def optimize(
             # contract: columns outside the z-orderable types (strings)
             # are skipped rather than refused — rows are identical
             # either way, only skipping selectivity differs
-            sch = StructType.fromJson(json.loads(meta["schemaString"]))
-            ztypes = {f.name: f.dataType.simpleString() for f in sch}
-            zorder_by = [
-                c for c in declared
-                if ztypes.get(c) in _Z_TYPES
-                or (ztypes.get(c) or "").startswith("decimal(")
-            ]
-        base_version = latest_version(table)
+            zcols = [c for c in declared if _zorderable(c)]
         if not live:
-            return base_version
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        if zorder_by:
-            types = {f.name: f.dataType.simpleString() for f in schema}
-            bad = [
-                c for c in zorder_by
-                if types.get(c) not in _Z_TYPES
-                and not (types.get(c) or "").startswith("decimal(")
-            ]
-            if bad:
-                raise DeltaUnsupported(
-                    f"zorder_by supports numeric/date/timestamp columns; "
-                    f"got {bad} of types "
-                    f"{[types.get(c) for c in bad]}"
-                )
+            return _Done(snap.version)
+        bad = [c for c in zcols if not _zorderable(c)]
+        if bad:
+            raise DeltaUnsupported(
+                f"zorder_by supports numeric/date/timestamp columns; "
+                f"got {bad} of types {[types.get(c) for c in bad]}"
+            )
         pcols = meta["partitionColumns"]
         if where:
             bad_keys = sorted(set(where) - set(pcols))
@@ -3004,8 +3090,7 @@ def optimize(
                 )
             }
             if not live:
-                return base_version
-        snapshot_paths = sorted(live)
+                return _Done(snap.version)
         # logical rows; a DV'd file scans MINUS its deleted rows, so the
         # rewrite is materialize-minus-DV and the descriptor dies with
         # the removed file — rows are unchanged, dataChange stays False
@@ -3027,20 +3112,19 @@ def optimize(
             df = _read_live(spark, table, meta, live)
 
         total = 0
-        for p in snapshot_paths:
-            st = live[p].get("stats")
+        for a in live.values():
+            st = a.get("stats")
             total += (json.loads(st).get("numRecords") or 0) if st else 0
-            dv = live[p].get("deletionVector") or {}
-            total -= dv.get("cardinality") or 0
+            total -= (a.get("deletionVector") or {}).get("cardinality") or 0
         n_files = max(1, -(-total // target_file_rows)) if total > 0 else 1
 
-        if zorder_by:
+        if zcols:
             # one column needs no interleave: a plain range sort IS the
             # optimal clustering for a single dimension
             zcol = (
-                F.col(zorder_by[0])
-                if len(zorder_by) == 1
-                else _zvalue_expr(df, zorder_by)
+                F.col(zcols[0])
+                if len(zcols) == 1
+                else _zvalue_expr(df, zcols)
             )
             keys = [F.col(c) for c in pcols] + [F.col("__z")]
             out = (
@@ -3063,52 +3147,18 @@ def optimize(
             drop_empty=True,
             stats_exclude=rt or (),
         )
-        _, _, live_now, _ = _replay(table)
-        if where:
-            live_now = {
-                p: a
-                for p, a in live_now.items()
-                if all(
-                    (a.get("partitionValues") or {}).get(k) == v
-                    for k, v in where_phys.items()
-                )
-            }
-        if sorted(live_now) != snapshot_paths:
-            # someone committed mid-rewrite: the rewrite is stale
-            _discard_staged(table, adds)
-            continue
-        ts = int(time.time() * 1000)
-        actions: list[dict] = [
+        return _Actions(
+            _removes(live, data_change=False) + adds,
             {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "zOrderBy": json.dumps(zorder_by),
-                        "targetFileRows": target_file_rows,
-                        "where": json.dumps(where or {}),
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            }
-        ]
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                }
-            }
-            for p in snapshot_paths
+                "zOrderBy": json.dumps(zcols),
+                "targetFileRows": target_file_rows,
+                "where": json.dumps(where or {}),
+            },
+            staged=adds,
         )
-        actions.extend(adds)
-        if _write_commit_atomic(table, base_version + 1, actions):
-            return base_version + 1
-        _discard_staged(table, adds)
-    raise DeltaConcurrentModification(
-        f"OPTIMIZE lost the rewrite race {max_retries} times: {table}"
-    )
+
+    # dataChange:false removes are compaction, legal on appendOnly
+    return _commit(table, "OPTIMIZE", attempt, max_retries, moves_rows=True)
 
 
 _CHANGE_DATA_DIR = "_change_data"
@@ -3224,17 +3274,14 @@ def _merge_delta_pinned(
 
     reject_duplicate_source_keys(source, on)
 
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        protocol, meta, live, txns = _replay(table, base_version)
-        _check_writer_protocol(
-            protocol, meta, "MERGE", removes_data=True,
-            moves_rows=True,
-        )
+    def attempt(snap: _Snapshot) -> _Actions | _Done:
+        base_version, meta, live = snap.version, snap.meta, snap.live
         if txn is not None:
-            seen = txns.get(txn[0])
+            seen = snap.txns.get(txn[0])
             if seen is not None and txn[1] <= seen:
-                return {"version": base_version, "skipped_replay": True}
+                return _Done(
+                    {"version": base_version, "skipped_replay": True}
+                )
 
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
         tbl_types = {f.name: f.dataType for f in schema.fields}
@@ -3544,38 +3591,24 @@ def _merge_delta_pinned(
             changed = not plan.changes().isEmpty()
         if not changed:
             _discard_staged(table, adds + cdc_actions)
-            return {
-                "version": base_version,
-                "files_removed": 0,
-                "files_added": 0,
-                "files_pruned": len(live),
-                **metrics,
-            }
-
-        ts = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "MERGE",
-                    "operationParameters": {
-                        "predicate": json.dumps(on),
-                        "matchedUpdate": when_matched_update is not None,
-                        "matchedDelete": when_matched_delete,
-                        "notMatchedInsert": when_not_matched_insert
-                        is not None,
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
+            return _Done(
+                {
+                    "version": base_version,
+                    "files_removed": 0,
+                    "files_added": 0,
+                    "files_pruned": len(live),
+                    **metrics,
                 }
-            }
-        ]
+            )
+
+        actions: list[dict] = []
         if txn is not None:
             actions.append(
                 {
                     "txn": {
                         "appId": txn[0],
                         "version": txn[1],
-                        "lastUpdated": ts,
+                        "lastUpdated": int(time.time() * 1000),
                     }
                 }
             )
@@ -3593,30 +3626,28 @@ def _merge_delta_pinned(
             )
         elif new_cols:
             actions.append({"metaData": staging_meta})
-        actions.extend(
+        actions += _removes(touched) + adds + cdc_actions
+        return _Actions(
+            actions,
             {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                    "partitionValues": touched[p].get("partitionValues"),
-                }
-            }
-            for p in sorted(touched)
-        )
-        actions.extend(adds)
-        actions.extend(cdc_actions)
-        if _write_commit_atomic(table, base_version + 1, actions):
-            return {
-                "version": base_version + 1,
+                "predicate": json.dumps(on),
+                "matchedUpdate": when_matched_update is not None,
+                "matchedDelete": when_matched_delete,
+                "notMatchedInsert": when_not_matched_insert is not None,
+            },
+            staged=adds + cdc_actions,
+            result=lambda v: {
+                "version": v,
                 "files_removed": len(touched),
                 "files_added": len(adds),
                 "files_pruned": len(live) - len(touched),
                 **metrics,
-            }
-        _discard_staged(table, adds + cdc_actions)
-    raise DeltaConcurrentModification(
-        f"MERGE lost the commit race {max_retries} times: {table}"
+            },
+        )
+
+    return _commit(
+        table, "MERGE", attempt, max_retries,
+        removes_data=True, moves_rows=True,
     )
 
 
@@ -4053,47 +4084,35 @@ def delete_delta(
             "delete_delta needs a non-empty predicate; to drop every "
             "row, overwrite with an empty frame"
         )
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        protocol, meta, live, _ = _replay(table, base_version)
-        _check_writer_protocol(
-            protocol, meta, "DELETE", removes_data=True,
-            moves_rows=(mode == "rewrite"),
-        )
+    params = {
+        "predicate": json.dumps(
+            [[c, op, str(lit)] for c, op, lit in predicate]
+        ),
+        "mode": mode,
+    }
+
+    def attempt(snap: _Snapshot) -> _Actions | _Done:
+        protocol, meta, live = snap.protocol, snap.meta, snap.live
         mapping = _column_mapping(meta)
         l2p = mapping[1] if mapping else {}
-        pcols = list(meta["partitionColumns"])
-        phys_pcols = [l2p.get(c, c) for c in pcols]
+        phys_pcols = [l2p.get(c, c) for c in meta["partitionColumns"]]
         candidates = _prune_by_predicate(meta, live, predicate)
         pruned = len(live) - len(candidates)
         cond = _predicate_column(predicate)
         is_hit = F.coalesce(cond, F.lit(False))  # NULL never deletes
-        ts = int(time.time() * 1000)
-        commit_info = {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": json.dumps(
-                        [[c, op, str(lit)] for c, op, lit in predicate]
-                    ),
-                    "mode": mode,
-                },
-                "engineInfo": "zeta-etl-spark delta_log",
-            }
-        }
 
-        def _no_op():
+        def _result(version: int, rows: int, files: int) -> dict:
             return {
-                "version": base_version,
-                "rows_deleted": 0,
-                "files_touched": 0,
+                "version": version,
+                "rows_deleted": rows,
+                "files_touched": files,
                 "files_pruned": pruned,
                 "mode": mode,
             }
 
+        no_op = _Done(_result(snap.version, 0, 0))
         if not candidates:
-            return _no_op()
+            return no_op
         # candidate rows with file identity; rows an existing DV already
         # deleted are dropped (they can never match again)
         rt = _rt_materialized(meta) if mode == "rewrite" else None
@@ -4110,7 +4129,7 @@ def delete_delta(
                 .collect()
             ]
             if not hit_fps:
-                return _no_op()
+                return no_op
             hit_rels = set(
                 _uri_by_rel(
                     hit_fps, table, candidates, require_all=False
@@ -4170,32 +4189,12 @@ def delete_delta(
                         subdir=_CHANGE_DATA_DIR,
                         drop_empty=True,
                     )
-                actions = [commit_info]
-                actions.extend(
-                    {
-                        "remove": {
-                            "path": p,
-                            "deletionTimestamp": ts,
-                            "dataChange": True,
-                            "partitionValues": touched[p].get(
-                                "partitionValues"
-                            ),
-                        }
-                    }
-                    for p in sorted(touched)
+                return _Actions(
+                    _removes(touched) + adds + cdc_actions,
+                    params,
+                    staged=adds + cdc_actions,
+                    result=lambda v: _result(v, n_del, len(touched)),
                 )
-                actions.extend(adds)
-                actions.extend(cdc_actions)
-                if _write_commit_atomic(table, base_version + 1, actions):
-                    return {
-                        "version": base_version + 1,
-                        "rows_deleted": n_del,
-                        "files_touched": len(touched),
-                        "files_pruned": pruned,
-                        "mode": mode,
-                    }
-                _discard_staged(table, adds + cdc_actions)
-                continue
 
             # ---- mode == 'dv' ----
             from zeta_etl_spark.sinks.delta_dv import z85_encode
@@ -4344,7 +4343,7 @@ def delete_delta(
             with open(dv_path, "wb") as fh:
                 fh.write(blob)
 
-            actions = [commit_info]
+            actions: list[dict] = []
             if not (
                 mwv == 7 and "deletionVectors" in feats
                 and mrv == 3 and "deletionVectors" in rfeats
@@ -4358,43 +4357,31 @@ def delete_delta(
                         )
                     }
                 )
-            for rel_unq, desc in sorted(descriptors.items()):
+            # each touched file is re-committed with its new descriptor
+            readds: dict[str, dict] = {}
+            for rel_unq, desc in descriptors.items():
                 quoted = urllib.parse.quote(rel_unq, safe="/=")
                 add = candidates.get(quoted) or candidates[rel_unq]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": add["path"],
-                            "deletionTimestamp": ts,
-                            "dataChange": True,
-                            "partitionValues": add.get("partitionValues"),
-                        }
-                    }
-                )
-                actions.append(
-                    {
-                        "add": {
-                            **add,
-                            "dataChange": True,
-                            "deletionVector": desc,
-                        }
-                    }
-                )
-            actions.extend(cdc_actions)
-            if _write_commit_atomic(table, base_version + 1, actions):
-                return {
-                    "version": base_version + 1,
-                    "rows_deleted": n_del,
-                    "files_touched": len(descriptors),
-                    "files_pruned": pruned,
-                    "mode": mode,
+                readds[add["path"]] = {
+                    **add,
+                    "dataChange": True,
+                    "deletionVector": desc,
                 }
-            os.unlink(dv_path)
-            _discard_staged(table, cdc_actions)
+            actions += _removes(readds)
+            actions += [{"add": a} for _, a in sorted(readds.items())]
+            return _Actions(
+                actions + cdc_actions,
+                params,
+                staged=cdc_actions,
+                staged_paths=[dv_path],
+                result=lambda v: _result(v, n_del, len(descriptors)),
+            )
         finally:
             scan.unpersist()
-    raise DeltaConcurrentModification(
-        f"DELETE lost the commit race {max_retries} times: {table}"
+
+    return _commit(
+        table, "DELETE", attempt, max_retries,
+        removes_data=True, moves_rows=(mode == "rewrite"),
     )
 
 
@@ -4430,13 +4417,9 @@ def update_delta(
         )
     if not set_exprs:
         raise ValueError("update_delta needs at least one SET expression")
-    for _ in range(max_retries):
-        base_version = latest_version(table)
-        protocol, meta, live, _ = _replay(table, base_version)
-        _check_writer_protocol(
-            protocol, meta, "UPDATE", removes_data=True,
-            moves_rows=True,
-        )
+
+    def attempt(snap: _Snapshot) -> _Actions | _Done:
+        meta, live = snap.meta, snap.live
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
         tbl_types = {f.name: f.dataType for f in schema.fields}
         bad = sorted(set(set_exprs) - set(tbl_types))
@@ -4464,17 +4447,21 @@ def update_delta(
             )
         mapping = _column_mapping(meta)
         l2p = mapping[1] if mapping else {}
-        pcols = list(meta["partitionColumns"])
-        phys_pcols = [l2p.get(c, c) for c in pcols]
+        phys_pcols = [l2p.get(c, c) for c in meta["partitionColumns"]]
         candidates = _prune_by_predicate(meta, live, predicate)
         pruned = len(live) - len(candidates)
-        if not candidates:
+
+        def _result(version: int, rows: int, files: int) -> dict:
             return {
-                "version": base_version,
-                "rows_updated": 0,
-                "files_touched": 0,
+                "version": version,
+                "rows_updated": rows,
+                "files_touched": files,
                 "files_pruned": pruned,
             }
+
+        no_op = _Done(_result(snap.version, 0, 0))
+        if not candidates:
+            return no_op
         cond = _predicate_column(predicate)
         is_hit = F.coalesce(cond, F.lit(False))  # NULL never updates
         rt = _rt_materialized(meta)
@@ -4491,12 +4478,7 @@ def update_delta(
                 .collect()
             ]
             if not hit_fps:
-                return {
-                    "version": base_version,
-                    "rows_updated": 0,
-                    "files_touched": 0,
-                    "files_pruned": pruned,
-                }
+                return no_op
             hit_rels = set(
                 _uri_by_rel(hit_fps, table, candidates, require_all=False)
             )
@@ -4580,45 +4562,21 @@ def update_delta(
                 )
         finally:
             scan.unpersist()
-        ts = int(time.time() * 1000)
-        actions: list[dict] = [
+        return _Actions(
+            _removes(touched) + adds + cdc_actions,
             {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "UPDATE",
-                    "operationParameters": {
-                        "predicate": json.dumps(
-                            [[c, op, str(lit)] for c, op, lit in predicate]
-                        ),
-                        "set": json.dumps(sorted(set_exprs)),
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            }
-        ]
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                    "partitionValues": touched[p].get("partitionValues"),
-                }
-            }
-            for p in sorted(touched)
+                "predicate": json.dumps(
+                    [[c, op, str(lit)] for c, op, lit in predicate]
+                ),
+                "set": json.dumps(sorted(set_exprs)),
+            },
+            staged=adds + cdc_actions,
+            result=lambda v: _result(v, n_upd, len(touched)),
         )
-        actions.extend(adds)
-        actions.extend(cdc_actions)
-        if _write_commit_atomic(table, base_version + 1, actions):
-            return {
-                "version": base_version + 1,
-                "rows_updated": n_upd,
-                "files_touched": len(touched),
-                "files_pruned": pruned,
-            }
-        _discard_staged(table, adds + cdc_actions)
-    raise DeltaConcurrentModification(
-        f"UPDATE lost the commit race {max_retries} times: {table}"
+
+    return _commit(
+        table, "UPDATE", attempt, max_retries,
+        removes_data=True, moves_rows=True,
     )
 
 
@@ -4630,46 +4588,28 @@ def restore_table(table: str, version: int) -> int:
     included), plus the old metaData when the schema changed since.  No
     data moves; restored files must still exist on disk (VACUUM past
     them makes the restore a loud error, exactly as in Delta).  History
-    is preserved: the restore is a NEW version on top."""
-    protocol, meta_now, live_now, _ = _replay(table)
-    _check_writer_protocol(protocol, meta_now, "RESTORE", removes_data=True)
-    _, meta_then, live_then, _ = _replay(table, version)
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "engineInfo": "zeta-etl-spark delta_log",
-            }
-        }
-    ]
-    if meta_then["schemaString"] != meta_now["schemaString"]:
-        actions.append({"metaData": meta_then})
-    for p in sorted(set(live_now) - set(live_then)):
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
+    is preserved: the restore is a NEW version on top, computed against
+    the snapshot it commits on."""
+
+    def attempt(snap: _Snapshot) -> _Actions:
+        _, meta_then, live_then, _ = _replay(table, version)
+        actions: list[dict] = []
+        if meta_then["schemaString"] != snap.meta["schemaString"]:
+            actions.append({"metaData": meta_then})
+        actions += _removes(
+            {p: a for p, a in snap.live.items() if p not in live_then}
         )
-    for p in sorted(set(live_then) - set(live_now)):
-        full = _add_file_path(table, urllib.parse.unquote(p))
-        if not os.path.exists(full):
-            raise FileNotFoundError(
-                f"RESTORE to {version} needs {p!r} but it was vacuumed"
-            )
-        actions.append({"add": {**live_then[p], "dataChange": True}})
-    new_version = latest_version(table) + 1
-    if not _write_commit_atomic(table, new_version, actions):
-        raise DeltaConcurrentModification(
-            f"lost the RESTORE commit race: {table}"
-        )
-    return new_version
+        for p in sorted(set(live_then) - set(snap.live)):
+            full = _add_file_path(table, urllib.parse.unquote(p))
+            if not os.path.exists(full):
+                raise FileNotFoundError(
+                    f"RESTORE to {version} needs {p!r} but it was vacuumed"
+                )
+            actions.append({"add": {**live_then[p], "dataChange": True}})
+        return _Actions(actions, {"version": version})
+
+    # metadata-only, so it takes the metadata ops' retry budget
+    return _commit(table, "RESTORE", attempt, 20, removes_data=True)
 
 
 def commit_cursor(cursor_path: str, consumer_id: str, version: int) -> None:
@@ -5079,35 +5019,28 @@ def enable_v2_checkpoints(table: str, max_retries: int = 20) -> int:
     may only write v2 checkpoints to a table whose protocol declares the
     feature).  No-op returning the current version when already
     enabled."""
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, _, _ = _replay(table, v)
-        if (
-            protocol.get("minReaderVersion") == 3
-            and "v2Checkpoint" in (protocol.get("readerFeatures") or [])
-        ):
-            return v
-        _check_writer_protocol(protocol, meta, "enable_v2_checkpoints")
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "UPGRADE PROTOCOL",
-                    "operationParameters": {"feature": "v2Checkpoint"},
-                    "engineInfo": "zeta-etl-spark delta_log",
+
+    def enabled(snap: _Snapshot) -> bool:
+        return snap.protocol.get("minReaderVersion") == 3 and (
+            "v2Checkpoint" in (snap.protocol.get("readerFeatures") or [])
+        )
+
+    return _commit(
+        table,
+        "UPGRADE PROTOCOL",
+        lambda snap: _Actions(
+            [
+                {
+                    "protocol": _feature_era_protocol(
+                        snap.protocol, add_reader=("v2Checkpoint",)
+                    )
                 }
-            },
-            {
-                "protocol": _feature_era_protocol(
-                    protocol, add_reader=("v2Checkpoint",)
-                )
-            },
-        ]
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"enable_v2_checkpoints lost the commit race {max_retries} "
-        f"times: {table}"
+            ],
+            {"feature": "v2Checkpoint"},
+        ),
+        max_retries,
+        name="enable_v2_checkpoints",
+        noop=enabled,
     )
 
 
@@ -5121,53 +5054,46 @@ def enable_in_commit_timestamps(table: str, max_retries: int = 20) -> int:
     (:func:`_stamp_in_commit_timestamp`) and timestamp time travel
     resolves against it.  No-op returning the current version when
     already enabled."""
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, _, _ = _replay(table, v)
-        cfg = dict(meta.get("configuration") or {})
-        if cfg.get("delta.enableInCommitTimestamps") == "true":
-            return v
-        _check_writer_protocol(
-            protocol, meta, "enable_in_commit_timestamps"
-        )
+
+    def attempt(snap: _Snapshot) -> _Actions:
         ict = int(time.time() * 1000)
         new_meta = {
-            **meta,
+            **snap.meta,
             "configuration": {
-                **cfg,
+                **(snap.meta.get("configuration") or {}),
                 "delta.enableInCommitTimestamps": "true",
                 # spec provenance: WHERE the feature turned on — readers
                 # fall back to mtimes strictly below this version
-                "delta.inCommitTimestampEnablementVersion": str(v + 1),
+                "delta.inCommitTimestampEnablementVersion": str(
+                    snap.version + 1
+                ),
                 "delta.inCommitTimestampEnablementTimestamp": str(ict),
             },
         }
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": ict,
-                    # pre-stamped so the enablement commit's stamp
-                    # EQUALS the provenance config, per spec
-                    "inCommitTimestamp": ict,
-                    "operation": "UPGRADE PROTOCOL",
-                    "operationParameters": {
-                        "feature": "inCommitTimestamp"
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            },
-            {
-                "protocol": _feature_era_protocol(
-                    protocol, add_writer=("inCommitTimestamp",)
-                )
-            },
-            {"metaData": new_meta},
-        ]
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"enable_in_commit_timestamps lost the commit race "
-        f"{max_retries} times: {table}"
+        return _Actions(
+            [
+                {
+                    "protocol": _feature_era_protocol(
+                        snap.protocol, add_writer=("inCommitTimestamp",)
+                    )
+                },
+                {"metaData": new_meta},
+            ],
+            {"feature": "inCommitTimestamp"},
+            # pre-stamped so the enablement commit's stamp EQUALS the
+            # provenance config, per spec
+            info={"inCommitTimestamp": ict},
+        )
+
+    return _commit(
+        table,
+        "UPGRADE PROTOCOL",
+        attempt,
+        max_retries,
+        name="enable_in_commit_timestamps",
+        noop=lambda snap: (snap.meta.get("configuration") or {}).get(
+            "delta.enableInCommitTimestamps"
+        ) == "true",
     )
 
 
@@ -5196,73 +5122,57 @@ def enable_row_tracking(
 
     No-op returning the current version when the feature, the names and
     (if asked) the flag are all already in place."""
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, live, _ = _replay(table, v)
-        cfg = dict(meta.get("configuration") or {})
-        have_feat = "rowTracking" in (
-            (protocol or {}).get("writerFeatures") or []
-        )
-        have_names = cfg.get(
-            "delta.rowTracking.materializedRowIdColumnName"
-        ) and cfg.get(
-            "delta.rowTracking.materializedRowCommitVersionColumnName"
-        )
-        have_flag = cfg.get("delta.enableRowTracking") == "true"
-        backfill = {
-            p: a for p, a in live.items() if a.get("baseRowId") is None
+
+    rid_key = "delta.rowTracking.materializedRowIdColumnName"
+    rcv_key = "delta.rowTracking.materializedRowCommitVersionColumnName"
+
+    def _backfill(snap: _Snapshot) -> dict[str, dict]:
+        return {
+            p: a for p, a in snap.live.items() if a.get("baseRowId") is None
         }
-        if (
-            have_feat
-            and have_names
-            and (have_flag or not stable)
-            and not backfill
-        ):
-            return v
-        _check_writer_protocol(protocol, meta, "enable_row_tracking")
+
+    def in_place(snap: _Snapshot) -> bool:
+        cfg = snap.meta.get("configuration") or {}
+        feats = (snap.protocol or {}).get("writerFeatures") or []
+        return bool(
+            "rowTracking" in feats
+            and cfg.get(rid_key)
+            and cfg.get(rcv_key)
+            and (cfg.get("delta.enableRowTracking") == "true" or not stable)
+            and not _backfill(snap)
+        )
+
+    def attempt(snap: _Snapshot) -> _Actions:
+        cfg = dict(snap.meta.get("configuration") or {})
         suffix = uuid.uuid4().hex[:12]
-        cfg.setdefault(
-            "delta.rowTracking.materializedRowIdColumnName",
-            f"_row-id-col-{suffix}",
-        )
-        cfg.setdefault(
-            "delta.rowTracking.materializedRowCommitVersionColumnName",
-            f"_row-commit-version-col-{suffix}",
-        )
+        cfg.setdefault(rid_key, f"_row-id-col-{suffix}")
+        cfg.setdefault(rcv_key, f"_row-commit-version-col-{suffix}")
         if stable:
             cfg["delta.enableRowTracking"] = "true"
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "UPGRADE PROTOCOL",
-                    "operationParameters": {
-                        "feature": "rowTracking",
-                        "backfillFiles": len(backfill),
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            },
-            {
-                "protocol": _feature_era_protocol(
-                    protocol,
-                    add_writer=("rowTracking", "domainMetadata"),
-                )
-            },
-            {"metaData": {**meta, "configuration": cfg}},
-        ]
-        # the re-add carries the add dict VERBATIM (stats, descriptor,
-        # partitionValues) — only the missing ids are filled at the
-        # commit choke point
-        actions.extend(
-            {"add": {**a, "dataChange": False}}
-            for _, a in sorted(backfill.items())
+        backfill = _backfill(snap)
+        return _Actions(
+            [
+                {
+                    "protocol": _feature_era_protocol(
+                        snap.protocol,
+                        add_writer=("rowTracking", "domainMetadata"),
+                    )
+                },
+                {"metaData": {**snap.meta, "configuration": cfg}},
+                # the re-add carries the add dict VERBATIM (stats,
+                # descriptor, partitionValues) — only the missing ids are
+                # filled at the commit choke point
+                *(
+                    {"add": {**a, "dataChange": False}}
+                    for _, a in sorted(backfill.items())
+                ),
+            ],
+            {"feature": "rowTracking", "backfillFiles": len(backfill)},
         )
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"enable_row_tracking lost the commit race {max_retries} "
-        f"times: {table}"
+
+    return _commit(
+        table, "UPGRADE PROTOCOL", attempt, max_retries,
+        name="enable_row_tracking", noop=in_place,
     )
 
 
@@ -5321,10 +5231,9 @@ def widen_column_type(
     changes the expression's arithmetic), and any conversion outside
     the lattice.  Returns the committed version."""
     new_type = _TYPE_JSON_NAMES.get(new_type, new_type)
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, _, _ = _replay(table, v)
-        _check_writer_protocol(protocol, meta, "widen_column_type")
+
+    def attempt(snap: _Snapshot) -> _Actions | _Done:
+        meta = snap.meta
         if column in meta["partitionColumns"]:
             raise DeltaUnsupported(
                 f"widen_column_type: {column!r} is a partition column — "
@@ -5371,7 +5280,7 @@ def widen_column_type(
             )
         frm = hit["type"]
         if frm == new_type:
-            return v  # no-op
+            return _Done(snap.version)
         if not _widening_ok(frm, new_type):
             raise DeltaUnsupported(
                 f"widen_column_type: {frm} -> {new_type} is not in the "
@@ -5381,7 +5290,7 @@ def widen_column_type(
             {
                 "fromType": frm,
                 "toType": new_type,
-                "tableVersion": v + 1,
+                "tableVersion": snap.version + 1,
             }
         ]
         hit["type"] = new_type
@@ -5391,39 +5300,29 @@ def widen_column_type(
         add_reader = ["typeWidening"]
         if new_type == "timestamp_ntz":
             add_reader.append("timestampNtz")
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "CHANGE COLUMN",
-                    "operationParameters": {
-                        "column": column,
-                        "fromType": frm,
-                        "toType": new_type,
-                    },
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            },
-            {
-                "protocol": _feature_era_protocol(
-                    protocol, add_reader=tuple(add_reader)
-                )
-            },
-            {
-                "metaData": {
-                    **meta,
-                    "schemaString": json.dumps(
-                        {**schema_json, "fields": fields}
-                    ),
-                    "configuration": cfg,
-                }
-            },
-        ]
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"widen_column_type lost the commit race {max_retries} times: "
-        f"{table}"
+        return _Actions(
+            [
+                {
+                    "protocol": _feature_era_protocol(
+                        snap.protocol, add_reader=tuple(add_reader)
+                    )
+                },
+                {
+                    "metaData": {
+                        **meta,
+                        "schemaString": json.dumps(
+                            {**schema_json, "fields": fields}
+                        ),
+                        "configuration": cfg,
+                    }
+                },
+            ],
+            {"column": column, "fromType": frm, "toType": new_type},
+        )
+
+    return _commit(
+        table, "CHANGE COLUMN", attempt, max_retries,
+        name="widen_column_type",
     )
 
 
@@ -5445,11 +5344,10 @@ def add_check_constraint(
         raise ValueError(
             f"constraint name must be an identifier, got {name!r}"
         )
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, live, _ = _replay(table, v)
-        _check_writer_protocol(protocol, meta, "add_check_constraint")
-        key = f"delta.constraints.{name}"
+    key = f"delta.constraints.{name}"
+
+    def attempt(snap: _Snapshot) -> _Actions:
+        meta, live = snap.meta, snap.live
         cfg = dict(meta.get("configuration") or {})
         if key in cfg:
             raise ValueError(
@@ -5468,34 +5366,26 @@ def add_check_constraint(
                     f"({sql}): {bad[0].asDict()}"
                 )
         cfg[key] = sql
-        p = dict(protocol or {})
+        p = dict(snap.protocol or {})
         mwv = p.get("minWriterVersion", 2)
+        actions: list[dict] = []
         if mwv == 7:
-            new_protocol = _feature_era_protocol(
-                p, add_writer=("checkConstraints",)
+            actions.append(
+                {
+                    "protocol": _feature_era_protocol(
+                        p, add_writer=("checkConstraints",)
+                    )
+                }
             )
         elif mwv < 3:
-            new_protocol = {**p, "minWriterVersion": 3}
-        else:
-            new_protocol = None  # ladder already admits constraints
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "ADD CONSTRAINT",
-                    "operationParameters": {"name": name, "expr": sql},
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            }
-        ]
-        if new_protocol is not None:
-            actions.append({"protocol": new_protocol})
+            actions.append({"protocol": {**p, "minWriterVersion": 3}})
+        # (writer 3..6: the ladder already admits constraints)
         actions.append({"metaData": {**meta, "configuration": cfg}})
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"add_check_constraint lost the commit race {max_retries} "
-        f"times: {table}"
+        return _Actions(actions, {"name": name, "expr": sql})
+
+    return _commit(
+        table, "ADD CONSTRAINT", attempt, max_retries,
+        name="add_check_constraint",
     )
 
 
@@ -5504,31 +5394,21 @@ def drop_check_constraint(
 ) -> int:
     """``ALTER TABLE ... DROP CONSTRAINT <name>`` — removes the config
     key (loud error if absent; Delta errors too)."""
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, _, _ = _replay(table, v)
-        _check_writer_protocol(protocol, meta, "drop_check_constraint")
-        key = f"delta.constraints.{name}"
-        cfg = dict(meta.get("configuration") or {})
+    key = f"delta.constraints.{name}"
+
+    def attempt(snap: _Snapshot) -> _Actions:
+        cfg = dict(snap.meta.get("configuration") or {})
         if key not in cfg:
             raise ValueError(f"no constraint {name!r} on {table!r}")
         del cfg[key]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "DROP CONSTRAINT",
-                    "operationParameters": {"name": name},
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            },
-            {"metaData": {**meta, "configuration": cfg}},
-        ]
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"drop_check_constraint lost the commit race {max_retries} "
-        f"times: {table}"
+        return _Actions(
+            [{"metaData": {**snap.meta, "configuration": cfg}}],
+            {"name": name},
+        )
+
+    return _commit(
+        table, "DROP CONSTRAINT", attempt, max_retries,
+        name="drop_check_constraint",
     )
 
 
@@ -5811,31 +5691,20 @@ def set_domain_metadata(
             "engine does not implement — user domains must not start "
             "with 'delta.'"
         )
-    for _ in range(max_retries):
-        v = latest_version(table)
-        protocol, meta, _, _ = _replay(table, v)
-        _check_writer_protocol(protocol, meta, "set_domain_metadata")
-        feats = set(protocol.get("writerFeatures") or [])
-        need = {"domainMetadata"}
-        if domain == "delta.clustering":
-            need.add("clusteredTable")
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "SET DOMAIN METADATA",
-                    "operationParameters": {"domain": domain},
-                    "engineInfo": "zeta-etl-spark delta_log",
-                }
-            }
-        ]
+    need = {"domainMetadata"}
+    if domain == "delta.clustering":
+        need.add("clusteredTable")
+
+    def attempt(snap: _Snapshot) -> _Actions:
+        actions: list[dict] = []
+        feats = set(snap.protocol.get("writerFeatures") or [])
         if not (
-            protocol.get("minWriterVersion") == 7 and need <= feats
+            snap.protocol.get("minWriterVersion") == 7 and need <= feats
         ):
             actions.append(
                 {
                     "protocol": _feature_era_protocol(
-                        protocol, add_writer=sorted(need)
+                        snap.protocol, add_writer=sorted(need)
                     )
                 }
             )
@@ -5848,11 +5717,11 @@ def set_domain_metadata(
                 }
             }
         )
-        if _write_commit_atomic(table, v + 1, actions):
-            return v + 1
-    raise DeltaConcurrentModification(
-        f"set_domain_metadata lost the commit race {max_retries} "
-        f"times: {table}"
+        return _Actions(actions, {"domain": domain})
+
+    return _commit(
+        table, "SET DOMAIN METADATA", attempt, max_retries,
+        name="set_domain_metadata",
     )
 
 
@@ -6117,75 +5986,62 @@ def clone_delta(src: str, dst: str, version: int | None = None) -> int:
     clones share exactly this caveat."""
     from zeta_etl_spark.sinks.delta_dv import dv_file_path
 
-    if _list_versions(dst):
-        raise DeltaUnsupported(f"already a Delta table: {dst}")
-    protocol, meta, live, _, domains = _replay(
-        src, version, with_domains=True
-    )
-    os.makedirs(os.path.join(dst, _LOG_DIR), exist_ok=True)
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src,
-                    "sourceVersion": (
-                        version
-                        if version is not None
-                        else latest_version(src)
-                    ),
-                },
-                "engineInfo": "zeta-etl-spark delta_log",
-            }
-        },
-        {"protocol": protocol or {"minReaderVersion": 1,
-                                  "minWriterVersion": 2}},
-        {
-            "metaData": {
-                **meta,
-                "id": uuid.uuid4().hex,
-                "createdTime": now_ms,
-            }
-        },
-    ]
-    for p, a in sorted(live.items()):
-        add = dict(a)
-        abs_path = os.path.abspath(
-            _add_file_path(src, urllib.parse.unquote(p))
+    def attempt(snap: _Snapshot | None) -> _Actions:
+        if snap is not None:
+            raise DeltaUnsupported(f"already a Delta table: {dst}")
+        protocol, meta, live, _, domains = _replay(
+            src, version, with_domains=True
         )
-        add["path"] = "file://" + urllib.parse.quote(abs_path, safe="/=")
-        desc = add.get("deletionVector")
-        if desc and desc.get("storageType") == "u":
-            # relative DVs resolve against the table root — re-anchor
-            # as an absolute-path descriptor so the clone keeps reading
-            # the source's DV file (offset survives; sizeInBytes and
-            # cardinality describe the bitmap, not the location)
-            add["deletionVector"] = {
-                **desc,
-                "storageType": "p",
-                "pathOrInlineDv": os.path.abspath(
-                    dv_file_path(desc, src)
-                ),
-            }
-        actions.append({"add": add})
-    for name, dom in (domains or {}).items():
-        if not dom.get("removed"):
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": name,
-                        "configuration": dom.get("configuration"),
-                        "removed": False,
-                    }
-                }
+        now_ms = int(time.time() * 1000)
+        actions: list[dict] = [
+            {"protocol": protocol or dict(_PROTOCOL)},
+            {"metaData": {**meta, "id": uuid.uuid4().hex,
+                          "createdTime": now_ms}},
+        ]
+        for p, a in sorted(live.items()):
+            add = dict(a)
+            abs_path = os.path.abspath(
+                _add_file_path(src, urllib.parse.unquote(p))
             )
-    if not _write_commit_atomic(dst, 0, actions):
-        raise DeltaConcurrentModification(
-            f"clone target {dst!r} gained a commit mid-clone"
+            add["path"] = "file://" + urllib.parse.quote(abs_path, safe="/=")
+            desc = add.get("deletionVector")
+            if desc and desc.get("storageType") == "u":
+                # relative DVs resolve against the table root — re-anchor
+                # as an absolute-path descriptor so the clone keeps
+                # reading the source's DV file (offset survives;
+                # sizeInBytes and cardinality describe the bitmap, not
+                # the location)
+                add["deletionVector"] = {
+                    **desc,
+                    "storageType": "p",
+                    "pathOrInlineDv": os.path.abspath(
+                        dv_file_path(desc, src)
+                    ),
+                }
+            actions.append({"add": add})
+        for name, dom in (domains or {}).items():
+            if not dom.get("removed"):
+                actions.append(
+                    {
+                        "domainMetadata": {
+                            "domain": name,
+                            "configuration": dom.get("configuration"),
+                            "removed": False,
+                        }
+                    }
+                )
+        return _Actions(
+            actions,
+            {
+                "source": src,
+                "sourceVersion": (
+                    version if version is not None else latest_version(src)
+                ),
+            },
         )
-    return 0
+
+    # a new table commits version 0 once: a lost race is no retry
+    return _commit(dst, "CLONE", attempt, 1, create=True)
 
 
 def convert_parquet_to_delta(
@@ -6195,78 +6051,73 @@ def convert_parquet_to_delta(
     place — ZERO data movement, the log simply claims the existing files
     (hive ``col=val`` directories become partitionValues).  Refuses a
     directory that is already a Delta table."""
-    if _list_versions(path):
-        raise DeltaUnsupported(f"already a Delta table: {path}")
     partition_by = list(partition_by)
-    rels: list[str] = []
-    for root, _dirs, files in os.walk(path):
-        rels.extend(
-            os.path.relpath(os.path.join(root, f), path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    if not rels:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    reader = spark.read
-    if partition_by:
-        reader = reader.option("basePath", path)
-    schema_string = reader.parquet(
-        *[os.path.join(path, r) for r in rels]
-    ).schema.json()
-    now_ms = int(time.time() * 1000)
-    adds = []
-    for rel in sorted(rels):
-        pvals = {}
-        for seg in os.path.dirname(rel).split(os.sep):
-            if "=" in seg:
-                k, _, raw = seg.partition("=")
-                pvals[k] = (
-                    None
-                    if raw == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(raw)
-                )
-        if set(pvals) != set(partition_by):
-            raise DeltaUnsupported(
-                f"file {rel!r} has partition dirs {sorted(pvals)} but "
-                f"partition_by={partition_by}"
+
+    def attempt(snap: _Snapshot | None) -> _Actions:
+        if snap is not None:
+            raise DeltaUnsupported(f"already a Delta table: {path}")
+        rels: list[str] = []
+        for root, _dirs, files in os.walk(path):
+            rels.extend(
+                os.path.relpath(os.path.join(root, f), path)
+                for f in files
+                if f.endswith(".parquet")
             )
-        full = os.path.join(path, rel)
-        adds.append(
-            {
-                "add": {
-                    "path": urllib.parse.quote(rel, safe="/="),
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(full),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": _stats_json(full),
+        if not rels:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        reader = spark.read
+        if partition_by:
+            reader = reader.option("basePath", path)
+        schema_string = reader.parquet(
+            *[os.path.join(path, r) for r in rels]
+        ).schema.json()
+        now_ms = int(time.time() * 1000)
+        adds = []
+        for rel in sorted(rels):
+            pvals = {}
+            for seg in os.path.dirname(rel).split(os.sep):
+                if "=" in seg:
+                    k, _, raw = seg.partition("=")
+                    pvals[k] = (
+                        None
+                        if raw == "__HIVE_DEFAULT_PARTITION__"
+                        else urllib.parse.unquote(raw)
+                    )
+            if set(pvals) != set(partition_by):
+                raise DeltaUnsupported(
+                    f"file {rel!r} has partition dirs {sorted(pvals)} but "
+                    f"partition_by={partition_by}"
+                )
+            full = os.path.join(path, rel)
+            adds.append(
+                {
+                    "add": {
+                        "path": urllib.parse.quote(rel, safe="/="),
+                        "partitionValues": pvals,
+                        "size": os.path.getsize(full),
+                        "modificationTime": now_ms,
+                        "dataChange": True,
+                        "stats": _stats_json(full),
+                    }
                 }
-            }
-        )
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CONVERT",
-                "operationParameters": {
-                    "partitionBy": json.dumps(partition_by)
+            )
+        return _Actions(
+            [
+                {"protocol": dict(_PROTOCOL)},
+                {
+                    "metaData": {
+                        "id": uuid.uuid4().hex,
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": schema_string,
+                        "partitionColumns": partition_by,
+                        "configuration": {},
+                        "createdTime": now_ms,
+                    }
                 },
-                "engineInfo": "zeta-etl-spark delta_log",
-            }
-        },
-        {"protocol": dict(_PROTOCOL)},
-        {
-            "metaData": {
-                "id": uuid.uuid4().hex,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
-                "partitionColumns": partition_by,
-                "configuration": {},
-                "createdTime": now_ms,
-            }
-        },
-        *adds,
-    ]
-    if not _write_commit_atomic(path, 0, actions):
-        raise DeltaConcurrentModification(f"lost the CONVERT race: {path}")
-    return 0
+                *adds,
+            ],
+            {"partitionBy": json.dumps(partition_by)},
+        )
+
+    # a new table commits version 0 once: a lost race is no retry
+    return _commit(path, "CONVERT", attempt, 1, create=True)

@@ -1,12 +1,11 @@
 """Structured Streaming execution helpers: incremental node materialization
-with availableNow triggers, watermarked hourly aggregation, stream-static
-joins (SURVEY.md §2.9).
+with availableNow triggers, watermarked hourly aggregation, stateful dedup
+and exactly-once foreachBatch sinks (SURVEY.md §2.9).
 
 Reference parity:
 - watermark + date_trunc-hour groupBy as the canonical tumbling window
   (T1/T2, zetadex-transactions-helius-pipeline.py:777-793; the F.window
   variant is deliberately commented out in the reference)
-- stream-static join (T5, :372-387)
 - stateful dedup (T6, zetadex-prices-pipeline.py:71-78)
 
 Scale notes: availableNow processes the backlog in bounded microbatches with
@@ -89,13 +88,6 @@ def dedup_stream(
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
-
-
-def stream_static_join(
-    stream: DataFrame, dim: DataFrame, on, how: str = "left"
-) -> DataFrame:
-    """T5: static side re-read per microbatch; broadcast-hinted."""
-    return stream.join(F.broadcast(dim), on, how)
 
 
 def foreach_batch_upsert(

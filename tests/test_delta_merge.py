@@ -472,3 +472,69 @@ def test_incremental_cdf_column_order_consistent(spark, tmp_path):
     )
     second, _ = read_delta_incremental(spark, t, cur, mode="cdf")
     assert first.columns == second.columns
+
+
+# ------------------------------------ metrics parity with the snapshots
+
+DELTA_METRIC_CLAUSES = {
+    "delete_update_insert": dict(
+        when_matched_delete=True,
+        delete_condition="s.v < 0",
+        when_matched_update="*",
+        update_condition="s.v > t.v",
+        when_not_matched_insert="*",
+        insert_condition="s.v <> 13",
+    ),
+    "delete_only": dict(when_matched_delete=True),
+    "dict_update_insert": dict(
+        when_matched_update={"v": "t.v + s.v"},
+        update_condition="s.v < 100 AND s.v <> 0",
+        when_not_matched_insert={"k": "s.k", "cat": "s.cat", "v": "s.v"},
+        insert_condition="s.v > 0",
+    ),
+}
+DELTA_METRIC_SOURCE = [
+    (1, "b", -1.0),
+    (2, "a", 100.0),
+    (3, "b", 0.0),
+    (4, "a", 200.0),
+    (12, "a", 5.0),
+    (13, "b", 13.0),
+    (None, "a", 99.0),
+]
+
+
+@pytest.mark.parametrize("write_cdf", [True, False], ids=["cdf", "no_cdf"])
+@pytest.mark.parametrize("clauses", sorted(DELTA_METRIC_CLAUSES))
+def test_merge_metrics_equal_snapshot_derived_counts(
+    spark, tmp_path, clauses, write_cdf
+):
+    """The counts observed on the join equal counts read off the before
+    and after snapshots (every update in these cases changes its row)."""
+    t = str(tmp_path / "t")
+    _base(spark, t)
+    before = {r.k: tuple(r) for r in read_delta(spark, t).collect()}
+    m = merge_delta(
+        spark, t, _df(spark, DELTA_METRIC_SOURCE), on=["k"],
+        write_cdf=write_cdf, **DELTA_METRIC_CLAUSES[clauses],
+    )
+    after_rows = read_delta(spark, t).collect()
+    after = {r.k: tuple(r) for r in after_rows}
+    matched = {k for k, _c, _v in DELTA_METRIC_SOURCE if k in before}
+    deleted = sum(1 for k in matched if k not in after)
+    updated = sum(1 for k in matched if k in after and after[k] != before[k])
+    want = {
+        "rows_deleted": deleted,
+        "rows_updated": updated,
+        "rows_inserted": len(after_rows) - (len(before) - deleted),
+        "rows_matched_copied": len(matched) - deleted - updated,
+    }
+    assert {k: m[k] for k in want} == want
+    assert sum(want.values()) > 0
+    if write_cdf:
+        kinds = [
+            r["_change_type"]
+            for r in table_changes(spark, t, m["version"], m["version"])
+            .collect()
+        ]
+        assert len(kinds) == deleted + 2 * updated + want["rows_inserted"]

@@ -493,3 +493,79 @@ def test_schema_evolution_rejects_dict_clauses(spark, tmp_path):
             when_matched_update={"v": "s.v"},
             schema_evolution=True,
         )
+
+
+# --- metrics parity: the clause counts come from the data write ------------
+
+METRIC_TARGET = TARGET + [("dn", None, 0)]
+METRIC_SOURCE = [
+    ("d1", 1, -1),
+    ("d1", 2, 100),
+    ("d2", 3, 0),
+    ("d2", 4, 200),
+    ("d9", 9, 5),
+    ("d9", 10, 13),
+    ("dn", None, 99),
+]
+METRIC_CLAUSES = {
+    "delete_update_insert": dict(
+        when_matched_delete=True,
+        delete_condition="s.v < 0",
+        when_matched_update="*",
+        update_condition="s.v > t.v",
+        when_not_matched_insert="*",
+        insert_condition="s.v <> 13",
+    ),
+    "delete_only": dict(when_matched_delete=True),
+    "dict_update_insert": dict(
+        when_matched_update={"v": "t.v + s.v"},
+        update_condition="s.v < 100 AND s.v <> 0",
+        when_not_matched_insert={"k": "s.k", "v": "s.v"},
+        insert_condition="s.v > 0",
+    ),
+}
+
+
+def _derived_metrics(before, after, source, null_safe):
+    """Clause counts read off the before/after snapshots (every update in
+    these cases changes its row, so updated = matched rows that differ)."""
+    b = {k: (d, k, v) for d, k, v in before}
+    a = {k: (d, k, v) for d, k, v in after}
+    matched = {
+        k for _d, k, _v in source
+        if k in b and (null_safe or k is not None)
+    }
+    deleted = sum(1 for k in matched if k not in a)
+    updated = sum(1 for k in matched if k in a and a[k] != b[k])
+    return {
+        "rows_deleted": deleted,
+        "rows_updated": updated,
+        "rows_inserted": len(after) - (len(before) - deleted),
+        "rows_matched_copied": len(matched) - deleted - updated,
+    }
+
+
+def _rows_nullable(spark, path):
+    return sorted(
+        ((r.day, r.k, r.v)
+         for r in spark.read.parquet(os.path.realpath(path)).collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("null_safe", [False, True], ids=["eq", "null_safe"])
+@pytest.mark.parametrize("clauses", sorted(METRIC_CLAUSES))
+def test_metrics_equal_snapshot_derived_counts(
+    spark, tmp_path, clauses, null_safe
+):
+    p = _mk(str(tmp_path / "t"), spark, METRIC_TARGET)
+    src = spark.createDataFrame(METRIC_SOURCE, "day string, k int, v int")
+    before = _rows_nullable(spark, p.path("tbl"))
+    m = p.merge_into(
+        spark, "tbl", src, on=["k"], null_safe_on=null_safe,
+        **METRIC_CLAUSES[clauses],
+    )
+    after = _rows_nullable(spark, p.path("tbl"))
+    want = _derived_metrics(before, after, METRIC_SOURCE, null_safe)
+    assert {k: m[k] for k in want} == want
+    assert sum(want.values()) > 0

@@ -371,3 +371,163 @@ def test_merge_upsert_views_minmax_through_stream(spark, tmp_path):
     run()
     assert view_rows() == recompute_rows()
     assert view_rows()[0][3] == 92
+
+
+def test_merge_change_rows_equal_snapshot_diff(spark, tmp_path):
+    """The change rows a merge hands back (``keep_changes``) equal the
+    relational ``table_changes(v, v+1)`` row for row, minus its version
+    columns — over seeded batches of updates, inserts, identical
+    re-deliveries, stale rows, tombstones and NULL group values."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from zeta_etl_spark.operators.merge_kernel import Pins
+    from zeta_etl_spark.plans.graph import Pipeline
+
+    schema = "k bigint, g bigint, seq bigint, v bigint, deleted boolean"
+    rng = random.Random(7)
+    live: dict[int, tuple] = {}
+
+    def row(k, seq):
+        return (k, rng.choice([0, 1, 2, None]), seq, rng.randrange(100),
+                rng.random() < 0.2)
+
+    first = [row(k, 0) for k in range(40)]
+    live.update({r[0]: r for r in first})
+    p = Pipeline("chg", str(tmp_path / "t"), retain_generations=2)
+
+    @p.table(name="state")
+    def _state(pl):
+        return spark.createDataFrame(first, schema)
+
+    p.run(spark, targets=["state"])
+
+    def changes_of(df):
+        return sorted(
+            (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
+            key=repr,
+        )
+
+    kinds = set()
+    for seq in range(1, 6):
+        batch = {}
+        for k in rng.sample(sorted(live), 8):  # updates
+            batch[k] = row(k, seq)
+        for k in rng.sample(sorted(live), 3):  # identical re-deliveries
+            batch[k] = live[k]
+        for k in rng.sample(sorted(live), 2):  # stale rows: must lose
+            batch[k] = (k, 9, -1, 9, False)
+        for k in range(100 * seq, 100 * seq + 4):  # inserts
+            batch[k] = row(k, seq)
+        src = spark.createDataFrame(list(batch.values()), schema)
+        with Pins() as pins:
+            m = p.merge_into(
+                spark, "state", src, on=["k"],
+                when_matched_update="*", update_condition="s.seq >= t.seq",
+                when_not_matched_insert="*", keep_changes=pins,
+            )
+            got = m["changes"]
+            want = p.table_changes(
+                spark, "state", m["read_generation"], m["generation"],
+                keys=["k"],
+            ).drop("_from_version", "_to_version")
+            assert changes_of(got) == changes_of(want)
+            # and under the tombstone filter a view applies
+            live_only = "NOT coalesce(deleted, false)"
+            assert changes_of(got.where(live_only)) == changes_of(
+                want.where(live_only)
+            )
+            kinds |= {r[0] for r in got.select("_change_type").collect()}
+            assert got.where(F.col("g").isNull()).count() == want.where(
+                F.col("g").isNull()
+            ).count()
+        for k, r in batch.items():
+            if k not in live or r[2] >= live[k][2]:
+                live[k] = r
+    assert kinds == {"insert", "update_preimage", "update_postimage"}
+    final = spark.read.parquet(os.path.realpath(p.path("state")))
+    assert sorted(
+        (tuple(r) for r in final.select("k", "g", "seq", "v", "deleted")
+         .collect()),
+        key=repr,
+    ) == sorted(live.values(), key=repr)
+
+
+def test_merge_upsert_views_fold_the_merge_change_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Steady-state batches fold every view from the base merge's own
+    change rows: the relational snapshot diff never runs, and the views
+    still equal a full recompute."""
+    from zeta_etl_spark.plans.graph import Pipeline
+    from zeta_etl_spark.plans.ivm import full_agg
+
+    diffs = []
+    real = Pipeline.table_changes
+
+    def spy(self, *a, **kw):
+        diffs.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(Pipeline, "table_changes", spy)
+    src = str(tmp_path / "src")
+    base = str(tmp_path / "t")
+    ckpt = str(tmp_path / "ckpt")
+    metrics: list = []
+    schema = "k bigint, g bigint, ts timestamp, v bigint, deleted boolean"
+    views = [
+        {"name": "agg", "group_cols": ["g"], "measures": ["v"],
+         "minmax": ["v"], "delete_predicate": "deleted"},
+        {"name": "cnt", "group_cols": ["deleted"], "measures": ["v"]},
+    ]
+
+    def run():
+        stream = read_json(spark, src, schema, streaming=True)
+        foreach_batch_merge_upsert(
+            stream, base, "state", ckpt, keys=["k"], sequence_by=["ts"],
+            spark=spark, n_buckets=4, metrics_out=metrics, views=views,
+        )
+
+    _write_json(
+        src,
+        [{"k": i, "g": i % 3, "ts": "2024-01-01 00:00:00", "v": i,
+          "deleted": False} for i in range(30)],
+        "w1.json",
+    )
+    run()
+    batches = [
+        [{"k": 3, "g": None, "ts": "2024-01-02 00:00:00", "v": 33,
+          "deleted": False},
+         {"k": 31, "g": 1, "ts": "2024-01-02 00:00:00", "v": 1,
+          "deleted": False}],
+        [{"k": 27, "g": 0, "ts": "2024-01-03 00:00:00", "v": 27,
+          "deleted": True},
+         {"k": 5, "g": 2, "ts": "2024-01-01 00:00:00", "v": 5,
+          "deleted": False}],  # identical re-delivery
+        [{"k": 5, "g": 2, "ts": "2024-01-01 00:00:00", "v": 5,
+          "deleted": False}],  # only a re-delivery: an empty change
+    ]
+    for i, rows in enumerate(batches):
+        _write_json(src, rows, f"w{i + 2}.json")
+        run()
+        live = read_merge_upsert_table(spark, base, "state")
+        for v in views:
+            got = spark.read.parquet(
+                os.path.realpath(os.path.join(base, v["name"]))
+            )
+            cols = sorted(got.columns)
+            rel = live
+            if v.get("delete_predicate"):
+                rel = live.where(
+                    f"NOT coalesce({v['delete_predicate']}, false)"
+                )
+            want = full_agg(rel, v["group_cols"], v["measures"],
+                            minmax=v.get("minmax", ()))
+            assert sorted(map(repr, got.select(*cols).collect())) == sorted(
+                map(repr, want.select(*cols).collect())
+            )
+    assert diffs == []
+    statuses = [m["status"] for m in metrics if "view" in m]
+    assert statuses[-2:] == ["advanced_empty_gap"] * 2
+    assert statuses.count("synced") == 4

@@ -260,3 +260,158 @@ def test_crash_at_seam_then_resume_is_exactly_once(
     # a further no-input run must be a no-op (idempotence after heal)
     run(spark, src, out, ckpt)
     assert read(spark, out) == expected
+
+
+# --- bucketed merge upsert with IVM views ----------------------------------
+#
+# foreach_batch_merge_upsert publishes the base merge, then one generation
+# per view, then the stream checkpoint confirms the batch.  Every publish
+# passes the generation store's ``post_publish`` seam (plans/graph.py), so
+# "crash after the n-th publish of wave 2" covers each point between them.
+
+MU_SCHEMA = (
+    "k bigint, g bigint, h string, ts timestamp, v bigint, deleted boolean"
+)
+MU_VIEWS = [
+    {
+        "name": "by_g",
+        "group_cols": ["g"],
+        "measures": ["v"],
+        "minmax": ["v"],
+        "delete_predicate": "deleted",
+        "partition_by": ["g"],
+    },
+    {
+        "name": "by_h",
+        "group_cols": ["h"],
+        "measures": ["v"],
+        "delete_predicate": "deleted",
+    },
+]
+MU_WAVE1 = [
+    {"k": i, "g": i % 3, "h": "xyz"[i % 2], "ts": "2024-01-01 00:00:00",
+     "v": 10 * i, "deleted": False}
+    for i in range(12)
+]
+MU_WAVE2 = [
+    # update in place, and an update that moves the row to another group
+    {"k": 1, "g": 1, "h": "y", "ts": "2024-01-02 00:00:00", "v": 111,
+     "deleted": False},
+    {"k": 2, "g": 0, "h": "x", "ts": "2024-01-02 00:00:00", "v": 20,
+     "deleted": False},
+    # tombstone of group 2's maximum (k=11, v=110): the minmax recompute
+    {"k": 11, "g": 2, "h": "y", "ts": "2024-01-02 00:00:00", "v": 110,
+     "deleted": True},
+    # identical re-delivery: no change row
+    {"k": 4, "g": 1, "h": "x", "ts": "2024-01-01 00:00:00", "v": 40,
+     "deleted": False},
+    # inserts, one into a NULL group of each view
+    {"k": 20, "g": None, "h": "z", "ts": "2024-01-02 00:00:00", "v": 7,
+     "deleted": False},
+    {"k": 21, "g": 2, "h": None, "ts": "2024-01-02 00:00:00", "v": 3,
+     "deleted": False},
+]
+MU_CRASHES = {
+    "base_published": 1,  # base merge live, no view synced
+    "first_view_published": 2,  # by_g synced, by_h not
+    "both_views_published": 3,  # both synced, stream checkpoint not
+}
+
+
+def _mu_rows(df):
+    # repr orders rows that hold NULLs
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _mu_run(spark, src, base, ckpt):
+    from zeta_etl_spark.streaming.runner import foreach_batch_merge_upsert
+
+    stream = spark.readStream.schema(MU_SCHEMA).json(src)
+    foreach_batch_merge_upsert(
+        stream, base, "state", ckpt, keys=["k"], sequence_by=["ts"],
+        spark=spark, n_buckets=4, views=MU_VIEWS,
+    )
+
+
+def _mu_read(spark, base):
+    from zeta_etl_spark.streaming.runner import read_merge_upsert_table
+
+    out = {"state": _mu_rows(
+        read_merge_upsert_table(spark, base, "state")
+        .select("k", "g", "h", "v", "deleted")
+    )}
+    for v in MU_VIEWS:
+        df = spark.read.parquet(
+            os.path.realpath(os.path.join(base, v["name"]))
+        )
+        out[v["name"]] = _mu_rows(df.select(*sorted(df.columns)))
+    return out
+
+
+def _mu_recompute(spark, base):
+    from zeta_etl_spark.plans.ivm import full_agg
+    from zeta_etl_spark.streaming.runner import read_merge_upsert_table
+
+    live = read_merge_upsert_table(
+        spark, base, "state", delete_predicate="deleted"
+    )
+    out = {}
+    for v in MU_VIEWS:
+        df = full_agg(
+            live, v["group_cols"], v["measures"], minmax=v.get("minmax", ())
+        )
+        out[v["name"]] = _mu_rows(df.select(*sorted(df.columns)))
+    return out
+
+
+@pytest.mark.parametrize("crash", sorted(MU_CRASHES), ids=sorted(MU_CRASHES))
+def test_merge_upsert_views_crash_then_resume_matches_twin(
+    spark, tmp_path, monkeypatch, crash
+):
+    from zeta_etl_spark.plans import graph as graph_mod
+
+    # clean twin over the same two waves
+    twin_src, twin_base = str(tmp_path / "twin_src"), str(tmp_path / "twin")
+    twin_ckpt = str(tmp_path / "twin_ckpt")
+    _write_json(twin_src, MU_WAVE1, "wave1.json")
+    _mu_run(spark, twin_src, twin_base, twin_ckpt)
+    _write_json(twin_src, MU_WAVE2, "wave2.json")
+    _mu_run(spark, twin_src, twin_base, twin_ckpt)
+    expected = _mu_read(spark, twin_base)
+
+    src, base = str(tmp_path / "src"), str(tmp_path / "base")
+    ckpt = str(tmp_path / "ckpt")
+    _write_json(src, MU_WAVE1, "wave1.json")
+    _mu_run(spark, src, base, ckpt)
+
+    _write_json(src, MU_WAVE2, "wave2.json")
+    publishes = {"n": 0}
+
+    def fault(tag):
+        if tag == "post_publish":
+            publishes["n"] += 1
+            if publishes["n"] == MU_CRASHES[crash]:
+                raise Crash(crash)
+
+    monkeypatch.setattr(graph_mod, "_fault_injection", fault)
+    with pytest.raises(Exception) as exc_info:
+        _mu_run(spark, src, base, ckpt)
+    assert "Crash" in str(exc_info.value) or isinstance(
+        exc_info.value, Crash
+    ), f"unexpected failure: {exc_info.value}"
+    assert publishes["n"] == MU_CRASHES[crash]
+
+    monkeypatch.setattr(graph_mod, "_fault_injection", lambda tag: None)
+    _mu_run(spark, src, base, ckpt)
+    got = _mu_read(spark, base)
+    assert got == expected
+    recomputed = _mu_recompute(spark, base)
+    assert {k: got[k] for k in recomputed} == recomputed
+    # both views carry their NULL group (column 1 after the sort by name)
+    assert all(
+        any(r[1] is None for r in got[v["name"]]) for v in MU_VIEWS
+    )
+
+    # a further no-input run is a no-op
+    _mu_run(spark, src, base, ckpt)
+    assert _mu_read(spark, base) == expected

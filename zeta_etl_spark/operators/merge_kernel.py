@@ -28,18 +28,55 @@ zetaflex-pipeline.py:146-151, zetadex-referrals-pipeline.py:147-152):
   (schema evolution); callers decide whether/when to allow them.
 
 Scale: one full-outer join shuffled on the key columns; everything else
-is row-local column arithmetic inside whole-stage codegen.  Metrics are
-one extra aggregate over the same join.
+is row-local column arithmetic inside whole-stage codegen.  One MERGE is
+one pass: each layer pins its source (:class:`Pins`), so the duplicate-key
+guard, the pruning probes and the join read one evaluation of it; the
+clause counts ride the first action over the join (``df.observe``, see
+:meth:`MergePlan.observe`), and the join itself is pinned only when a
+second consumer (a change-row writer) reads it too.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+class Pins:
+    """Frames one MERGE evaluates once (``localCheckpoint``) and releases
+    together when it is done — their blocks otherwise stay in the block
+    manager until the JVM happens to collect the frames.  A frame must not
+    be read after :meth:`release`; use as a context manager."""
+
+    def __init__(self) -> None:
+        self._rdds: list = []
+
+    def pin(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """Checkpoint ``df``.  Lazy by default: the first action over the
+        result evaluates it and every later one reads the stored rows.
+        ``eager=True`` evaluates it now — needed when an observation rides
+        ``df``, because a lazily checkpointed plan runs inside another
+        action's lineage, where observed metrics are never reported."""
+        df = df.localCheckpoint(eager=eager)
+        self._rdds.append(df._jdf.queryExecution().analyzed().rdd())
+        return df
+
+    def release(self) -> None:
+        # the context-level call: RDD.unpersist does the same but warns
+        # that a locally checkpointed RDD cannot be recomputed
+        for rdd in self._rdds:
+            rdd.context().unpersistRDD(rdd.id(), False)
+        self._rdds.clear()
+
+    def __enter__(self) -> "Pins":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def reject_duplicate_source_keys(source: DataFrame, on: Sequence[str]) -> None:
@@ -74,6 +111,7 @@ class MergePlan:
     del_gate: Column
     ins_gate: Column
     survives: Column
+    unchanged: Column  # the clause output equals the target row
     out_cols: list  # Column list: merged output, target order + new_cols
     pre_cols: list  # Column list: target-side preimage, same names/types
     rt_cols: list = field(default_factory=list)
@@ -86,22 +124,30 @@ class MergePlan:
             *self.out_cols, *self.rt_cols
         )
 
-    def changes(self) -> DataFrame:
+    def changes(self, drop_identical: bool = False) -> DataFrame:
         """Row-level change feed of this merge, Delta CDF shape: the
         ``_change_type`` column holds ``delete`` / ``update_preimage`` /
         ``update_postimage`` / ``insert``.  Matched-and-copied rows emit
         NOTHING — exactly the spec's point of carrying cdc files instead
-        of deriving changes from rewritten data files."""
+        of deriving changes from rewritten data files.
+
+        ``drop_identical=True`` also drops the pre/post pairs of updates
+        that leave the row as it was (a re-delivered row): the feed then
+        equals the snapshot diff of the two generations, row for row
+        (``Pipeline.table_changes`` without its version columns)."""
         j = self.joined
         ct = "_change_type"
+        upd = self.upd_gate
+        if drop_identical:
+            upd = upd & ~self.unchanged
         pieces = [
             j.where(self.del_gate).select(
                 *self.pre_cols, F.lit("delete").alias(ct)
             ),
-            j.where(self.upd_gate).select(
+            j.where(upd).select(
                 *self.pre_cols, F.lit("update_preimage").alias(ct)
             ),
-            j.where(self.upd_gate).select(
+            j.where(upd).select(
                 *self.out_cols, F.lit("update_postimage").alias(ct)
             ),
             j.where(self.ins_gate).select(
@@ -110,10 +156,16 @@ class MergePlan:
         ]
         return reduce(lambda a, b: a.unionByName(b), pieces)
 
-    def metrics(self) -> dict:
-        """{rows_deleted, rows_updated, rows_inserted, rows_matched_copied}
-        — one aggregate over the join."""
-        row = self.joined.agg(
+    def observe(self) -> Callable[[], dict]:
+        """Attach the clause counters to ``joined``, before the survivor
+        filter so deleted rows count too.  They fill when the first action
+        over ``joined`` completes — the data write, or the join's eager
+        pin — so they cost no job of their own.  Returns the getter of
+        {rows_deleted, rows_updated, rows_inserted, rows_matched_copied};
+        call it only after that action."""
+        obs = Observation()
+        self.joined = self.joined.observe(
+            obs,
             F.sum(self.del_gate.cast("bigint")).alias("deleted"),
             F.sum(self.upd_gate.cast("bigint")).alias("updated"),
             F.sum(self.ins_gate.cast("bigint")).alias("inserted"),
@@ -122,13 +174,18 @@ class MergePlan:
                     "bigint"
                 )
             ).alias("matched_copied"),
-        ).first()
-        return {
-            "rows_deleted": row["deleted"] or 0,
-            "rows_updated": row["updated"] or 0,
-            "rows_inserted": row["inserted"] or 0,
-            "rows_matched_copied": row["matched_copied"] or 0,
-        }
+        )
+
+        def counts() -> dict:
+            row = obs.get
+            return {
+                "rows_deleted": row["deleted"] or 0,
+                "rows_updated": row["updated"] or 0,
+                "rows_inserted": row["inserted"] or 0,
+                "rows_matched_copied": row["matched_copied"] or 0,
+            }
+
+        return counts
 
 
 def build_merge_plan(
@@ -211,7 +268,7 @@ def build_merge_plan(
         else F.lit(False)
     )
 
-    out_cols = []
+    out = []  # output value per column, target order + new_cols
     for c in tcols:
         if when_matched_update is not None:
             if when_matched_update == "*":
@@ -230,17 +287,24 @@ def build_merge_plan(
                 sql = when_not_matched_insert.get(c)
                 ins = F.expr(sql) if sql is not None else F.lit(None)
             col = col.otherwise(ins)
-        out_cols.append(col.cast(tfields[c]).alias(c))
+        out.append(col.cast(tfields[c]))
     for c in new_cols:  # appended after the existing schema
         col = F.when(upd_gate, F.expr(f"s.{c}"))
         col = col.when(F.col("t").isNotNull(), F.lit(None))
         if when_not_matched_insert is not None:
             col = col.otherwise(F.expr(f"s.{c}"))
-        out_cols.append(col.cast(tfields[c]).alias(c))
+        out.append(col.cast(tfields[c]))
 
-    pre_cols = [
-        F.expr(f"t.{c}").cast(tfields[c]).alias(c) for c in tcols
-    ] + [F.lit(None).cast(tfields[c]).alias(c) for c in new_cols]
+    pre = [F.expr(f"t.{c}").cast(tfields[c]) for c in tcols] + [
+        F.lit(None).cast(tfields[c]) for c in new_cols
+    ]
+    out_cols = [col.alias(c) for col, c in zip(out, tcols + new_cols)]
+    pre_cols = [col.alias(c) for col, c in zip(pre, tcols + new_cols)]
+    unchanged = reduce(
+        lambda a, b: a & b,
+        [a.eqNullSafe(b) for a, b in zip(pre, out)],
+        F.lit(True),
+    )
 
     rt_cols = []
     if row_tracking:
@@ -269,6 +333,7 @@ def build_merge_plan(
         del_gate=del_gate,
         ins_gate=ins_gate,
         survives=survives,
+        unchanged=unchanged,
         out_cols=out_cols,
         pre_cols=pre_cols,
         rt_cols=rt_cols,

@@ -22,7 +22,12 @@ The serving contract
   CDC; the change feed is derived relationally by key).
 - ``sync()`` advances every registered view incrementally
   (``sync_agg_view``: version-gap replay → delta fold → MERGE) —
-  exactly-once under crashes, cost ∝ change volume.
+  exactly-once under crashes.  The replay is relational: two full base
+  snapshot scans and a join, whose output (and the fold and MERGE after
+  it) is ∝ change volume.
+- ``ingest_stream(stream, ...)`` folds each view from the base merge's
+  own change rows, cost ∝ batch; only a gap (a crash replay) takes the
+  relational replay.
 - ``request(keys, aggs, ...)`` is the dashboard read:
 
     1. the navigator proves which materialized view can answer and
@@ -43,10 +48,11 @@ the view's generation stamp (hard-linked republish) — the subsequent
 cache miss is a deliberate conservative trade: generation equality stays
 the one freshness rule, with no "content probably unchanged" carve-outs.
 
-At 100 TB: base facts are written once per ingest; each view sync
-shuffles only the change feed; every dashboard read is O(|view|) on a
-miss and O(|result|) on a hit.  The fact table is scanned by exactly one
-consumer — the view maintenance — no matter how many dashboards exist.
+At 100 TB: base facts are written once per ingest; a streamed view sync
+shuffles only the change feed (a relational replay also scans the base
+twice); every dashboard read is O(|view|) on a miss and O(|result|) on a
+hit.  The fact table is scanned by exactly one consumer — the view
+maintenance — no matter how many dashboards exist.
 """
 
 from __future__ import annotations
@@ -154,10 +160,12 @@ class ServingPath:
         """Streaming bronze ingest: the reference's actual topology (the
         bronze table is fed by a stream, SURVEY §2.9 T1/T5).  Each
         microbatch CDC-merges into the base generation table
-        (``streaming.runner.foreach_batch_merge_upsert`` — per-batch cost
-        ∝ batch, bucket-pruned) and brings every registered view to the
-        new base generation incrementally BEFORE the stream checkpoint
-        confirms the batch, so the serving contract is identical to the
+        (``streaming.runner.foreach_batch_merge_upsert`` — bucket-pruned)
+        and brings every registered view to the new base generation
+        incrementally, from the merge's own change rows, BEFORE the stream
+        checkpoint confirms the batch — per-batch cost ∝ batch, except
+        after a crash, whose gap the relational replay (two full base
+        snapshot scans) heals.  The serving contract is identical to the
         batch path: the view generation is the freshness anchor, a
         request after the stream is a cache miss recomputed from the
         fresh view, and its repeat is a hit.

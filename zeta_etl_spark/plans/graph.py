@@ -34,6 +34,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from zeta_etl_spark.operators.cdc import latest_by_keys
+from zeta_etl_spark.operators.merge_kernel import (
+    Pins,
+    build_merge_plan,
+    reject_duplicate_source_keys,
+)
 
 
 def _fault_injection(tag: str) -> None:
@@ -593,6 +598,7 @@ class Pipeline:
         schema_evolution: bool = False,
         null_safe_on: bool = False,
         commit_extra: dict | None = None,
+        keep_changes: Pins | None = None,
     ) -> dict:
         """Batch ``MERGE INTO`` on a materialized overwrite table — the
         engine's stand-in for Delta's MERGE (the reference's CDC targets are
@@ -640,20 +646,26 @@ class Pipeline:
         Otherwise the whole table is read and rewritten (same as Delta when
         files cannot be pruned).
 
+        One pass: the source is pinned, so the duplicate-key guard, the
+        touched-partition collect and the join read one evaluation of it,
+        and the clause counts ride the data write (``df.observe``).
+
         Atomicity: the merged generation is staged, sealed with a ``merge``
         commit record, and published by the same atomic pointer swap as
         overwrite materialization — a crash at any seam leaves readers on a
         complete snapshot (crash-matrix in tests/test_merge_into.py), and
         ``read_version`` time-travels to the pre-merge generation.
+
+        ``keep_changes`` (internal, for change-feed consumers such as the
+        IVM views of ``foreach_batch_merge_upsert``): the join is pinned
+        into these pins, which the caller releases, and the result also
+        carries ``changes`` — this merge's change rows with unchanged
+        update pairs dropped, equal row for row to ``table_changes`` from
+        ``read_generation`` to ``generation`` — and ``read_generation``.
         """
         from functools import reduce
 
         from pyspark.sql import functions as F
-
-        from zeta_etl_spark.operators.merge_kernel import (
-            build_merge_plan,
-            reject_duplicate_source_keys,
-        )
 
         node = self.nodes[name]
         if node.kind not in ("table", "cdc") or node.extra.get("incremental"):
@@ -672,124 +684,151 @@ class Pipeline:
         path = self.path(name)
         if not os.path.lexists(path):
             raise ValueError(f"merge_into({name!r}): table not materialized")
-        cur = os.path.realpath(path)
-        on = list(on)
-        pcols = list(node.partition_by)
+        pins = keep_changes if keep_changes is not None else Pins()
+        try:
+            cur = os.path.realpath(path)
+            on = list(on)
+            pcols = list(node.partition_by)
 
-        target = spark.read.parquet(cur)
-        tcols = target.columns
-        tfields = {f.name: f.dataType for f in target.schema.fields}
+            target = spark.read.parquet(cur)
+            tcols = target.columns
+            tfields = {f.name: f.dataType for f in target.schema.fields}
 
-        # Delta's multiple-source-rows-match guard: one aggregate job over
-        # the source (usually the small side of a merge).
-        reject_duplicate_source_keys(source, on)
+            # the guard below evaluates the pinned source; the
+            # touched-partition collect and the join read the stored rows
+            source = pins.pin(source)
+            # Delta's multiple-source-rows-match guard: one aggregate job
+            # over the source (usually the small side of a merge).
+            reject_duplicate_source_keys(source, on)
 
-        # schema evolution (Delta autoMerge stand-in): source-only columns
-        # extend the target schema; pre-existing rows read NULL.  Only the
-        # "*" clause forms (the evolved columns' values are unambiguous),
-        # and always a FULL rewrite — without a transaction log, hard-linked
-        # old-schema partition files cannot serve the widened schema.
-        new_cols: list[str] = []
-        if schema_evolution:
-            new_cols = [c for c in source.columns if c not in tcols]
-        if new_cols:
-            if when_matched_update not in (None, "*") or (
-                when_not_matched_insert not in (None, "*")
-            ):
-                raise ValueError(
-                    "merge_into: schema_evolution supports only '*' "
-                    "update/insert clauses (dict clauses make the evolved "
-                    "columns' values ambiguous)"
-                )
-            sfields = {f.name: f.dataType for f in source.schema.fields}
-            tfields.update({c: sfields[c] for c in new_cols})
-
-        prunable = (
-            bool(pcols) and set(pcols) <= set(on) and not new_cols
-        )
-        touched: list[tuple] | None = None
-        if prunable:
-            touched = [
-                tuple(r[c] for c in pcols)
-                for r in source.select(*pcols).distinct().collect()
-            ]
-            pred = reduce(
-                lambda a, b: a | b,
-                [
-                    reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(c).isNull()
-                            if v is None
-                            else (F.col(c) == F.lit(v))
-                            for c, v in zip(pcols, tup)
-                        ],
+            # schema evolution (Delta autoMerge stand-in): source-only
+            # columns extend the target schema; pre-existing rows read NULL.
+            # Only the "*" clause forms (the evolved columns' values are
+            # unambiguous), and always a FULL rewrite — without a transaction
+            # log, hard-linked old-schema partition files cannot serve the
+            # widened schema.
+            new_cols: list[str] = []
+            if schema_evolution:
+                new_cols = [c for c in source.columns if c not in tcols]
+            if new_cols:
+                if when_matched_update not in (None, "*") or (
+                    when_not_matched_insert not in (None, "*")
+                ):
+                    raise ValueError(
+                        "merge_into: schema_evolution supports only '*' "
+                        "update/insert clauses (dict clauses make the "
+                        "evolved columns' values ambiguous)"
                     )
-                    for tup in touched
-                ],
-                F.lit(False),
+                sfields = {
+                    f.name: f.dataType for f in source.schema.fields
+                }
+                tfields.update({c: sfields[c] for c in new_cols})
+
+            prunable = (
+                bool(pcols) and set(pcols) <= set(on) and not new_cols
             )
-            target = target.where(pred)  # partition-pruned scan
-
-        # the clause matrix (join, gates, output projection) is shared with
-        # the native Delta format layer — see operators/merge_kernel.py
-        plan = build_merge_plan(
-            target,
-            source,
-            on,
-            when_matched_update=when_matched_update,
-            update_condition=update_condition,
-            when_matched_delete=when_matched_delete,
-            delete_condition=delete_condition,
-            when_not_matched_insert=when_not_matched_insert,
-            insert_condition=insert_condition,
-            null_safe_on=null_safe_on,
-            new_cols=new_cols,
-            tfields=tfields,
-        )
-        metrics: dict = plan.metrics() if collect_metrics else {}
-        merged = plan.merged()
-        if node.sort_within_partitions:
-            merged = merged.sortWithinPartitions(*node.sort_within_partitions)
-
-        gen_root, _ = self._gen_prepare(path)
-        with self._staging(gen_root) as staged:
-            writer = merged.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(staged)
-            n_linked = 0
+            touched: list[tuple] | None = None
             if prunable:
-                n_linked = self._link_untouched_partitions(
-                    cur, staged, pcols, touched
+                touched = [
+                    tuple(r[c] for c in pcols)
+                    for r in source.select(*pcols).distinct().collect()
+                ]
+                pred = reduce(
+                    lambda a, b: a | b,
+                    [
+                        reduce(
+                            lambda a, b: a & b,
+                            [
+                                F.col(c).isNull()
+                                if v is None
+                                else (F.col(c) == F.lit(v))
+                                for c, v in zip(pcols, tup)
+                            ],
+                        )
+                        for tup in touched
+                    ],
+                    F.lit(False),
                 )
-            _fault_injection("post_stage")
-            self._seal_commit_meta(staged, "merge", **(commit_extra or {}))
-            # MERGE is read-modify-write: commit with CAS on the generation
-            # the merge READ (`cur`, pinned before the join was planned) —
-            # a concurrent commit in between means this result is stale, so
-            # the loser aborts (ConcurrentWriteError) instead of silently
-            # losing the winner's update
-            read_base = os.path.basename(cur)
-            read_ver = (
-                int(read_base[1:]) if read_base.startswith("v") else None
+                target = target.where(pred)  # partition-pruned scan
+
+            # the clause matrix (join, gates, output projection) is shared
+            # with the native Delta format layer — operators/merge_kernel.py
+            plan = build_merge_plan(
+                target,
+                source,
+                on,
+                when_matched_update=when_matched_update,
+                update_condition=update_condition,
+                when_matched_delete=when_matched_delete,
+                delete_condition=delete_condition,
+                when_not_matched_insert=when_not_matched_insert,
+                insert_condition=insert_condition,
+                null_safe_on=null_safe_on,
+                new_cols=new_cols,
+                tfields=tfields,
             )
-            nxt = self._seal_and_publish(
-                path, gen_root, staged, expect_version=read_ver
+            counts = plan.observe() if collect_metrics else (lambda: {})
+            if keep_changes is not None:
+                # the change rows are the join's second consumer: evaluate
+                # it once (the observation rides this action)
+                plan.joined = pins.pin(plan.joined, eager=True)
+            merged = plan.merged()
+            if node.sort_within_partitions:
+                merged = merged.sortWithinPartitions(
+                    *node.sort_within_partitions
+                )
+
+            gen_root, _ = self._gen_prepare(path)
+            with self._staging(gen_root) as staged:
+                writer = merged.write.mode("overwrite")
+                if pcols:
+                    writer = writer.partitionBy(*pcols)
+                writer.parquet(staged)
+                n_linked = 0
+                if prunable:
+                    n_linked = self._link_untouched_partitions(
+                        cur, staged, pcols, touched
+                    )
+                _fault_injection("post_stage")
+                self._seal_commit_meta(
+                    staged, "merge", **(commit_extra or {})
+                )
+                # MERGE is read-modify-write: commit with CAS on the
+                # generation the merge READ (`cur`, pinned before the join
+                # was planned) — a concurrent commit in between means this
+                # result is stale, so the loser aborts (ConcurrentWriteError)
+                # instead of silently losing the winner's update
+                read_base = os.path.basename(cur)
+                read_ver = (
+                    int(read_base[1:]) if read_base.startswith("v") else None
+                )
+                nxt = self._seal_and_publish(
+                    path, gen_root, staged, expect_version=read_ver
+                )
+            # drop the memoized frame — it pins the pre-merge generation
+            if name in self._done:
+                df_new = spark.read.parquet(os.path.realpath(path))
+                df_new.createOrReplaceTempView(f"{self.name}__{name}")
+                self._done[name] = df_new
+            metrics = counts()  # filled by the write (or the join's pin)
+            if keep_changes is not None:
+                metrics.update(
+                    changes=plan.changes(drop_identical=True),
+                    read_generation=read_ver,
+                )
+            metrics.update(
+                generation=nxt,
+                partition_pruned=prunable,
+                touched_partitions=(
+                    len(touched) if touched is not None else None
+                ),
+                linked_partitions=n_linked,
+                evolved_columns=new_cols,
             )
-        # drop the memoized frame — it pins the pre-merge generation
-        if name in self._done:
-            df_new = spark.read.parquet(os.path.realpath(path))
-            df_new.createOrReplaceTempView(f"{self.name}__{name}")
-            self._done[name] = df_new
-        metrics.update(
-            generation=nxt,
-            partition_pruned=prunable,
-            touched_partitions=len(touched) if touched is not None else None,
-            linked_partitions=n_linked,
-            evolved_columns=new_cols,
-        )
-        return metrics
+            return metrics
+        finally:
+            if keep_changes is None:
+                pins.release()
 
     @staticmethod
     def _link_untouched_partitions(
@@ -1784,7 +1823,10 @@ class Pipeline:
         ``check_unique=False``); change feeds over non-keyed tables are not
         expressible relationally.  Scale shape: one shuffle per side on the
         key columns; identical rows are dropped before the union, so the
-        output is proportional to the CHANGE volume, not the table.
+        OUTPUT is proportional to the change volume — but the cost is two
+        full snapshot scans and their join, proportional to the table.  A
+        merge's own change rows (``merge_into(keep_changes=...)``) are the
+        change-sized alternative where a consumer can take them.
         """
         from functools import reduce
 

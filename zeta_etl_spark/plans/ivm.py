@@ -379,11 +379,21 @@ def sync_agg_view(
     delete_predicate: str | None = None,
     check_unique: bool = True,
     minmax: Sequence[str] = (),
+    changes: tuple[int, int, DataFrame] | None = None,
 ) -> dict:
     """Bring an aggregate view up to the base table's current generation —
     the maintenance driver composing the whole IVM stack:
 
         base version gap → Pipeline.table_changes → delta fold → MERGE
+
+    ``changes=(from_version, to_version, rows)`` hands in the change rows
+    of the base merge that published ``to_version`` over ``from_version``
+    (``Pipeline.merge_into(keep_changes=...)``).  When the view's anchor
+    is ``from_version`` and the base still serves ``to_version``, those
+    rows are folded directly — cost ∝ the change, no snapshot is read.
+    Any other gap (a crash replay, a snapshot ingest, ``ServingPath.sync``)
+    takes the relational replay, whose cost is two full base snapshot
+    scans and a join.
 
     The view's commit record carries the base generation it reflects, which
     makes the operation EXACTLY-ONCE under crashes anywhere in a
@@ -445,24 +455,27 @@ def sync_agg_view(
             minmax=minmax,
         )
         return {**out, "status": "reseeded_gap_vacuumed"}
-    cdf = _not_deleted(
-        pipeline.table_changes(
-            spark,
-            base_name,
-            anchor,
-            base_cur,
-            keys=keys,
-            check_unique=check_unique,
-        ),
-        delete_predicate,
-    )
-    # the CDF plan is a full-outer join of two base snapshots, and it is
-    # consumed several times downstream (isEmpty here, the delta fold,
-    # merge_into's duplicate-source guard + metrics + write).  Evaluate it
-    # ONCE (ADVICE r7): localCheckpoint materializes the change rows —
-    # sized by change volume, not view size — and truncates the join
-    # lineage so every consumer reads the materialized partitions.
-    cdf = cdf.localCheckpoint(eager=True)
+    if changes is not None and changes[:2] == (anchor, base_cur):
+        # the merge's own change rows, read from its pinned join
+        cdf = _not_deleted(changes[2], delete_predicate)
+    else:
+        cdf = _not_deleted(
+            pipeline.table_changes(
+                spark,
+                base_name,
+                anchor,
+                base_cur,
+                keys=keys,
+                check_unique=check_unique,
+            ),
+            delete_predicate,
+        )
+        # the relational CDF is a full-outer join of two base snapshots,
+        # read by isEmpty here and by the delta fold.  Evaluate it ONCE
+        # (ADVICE r7): localCheckpoint materializes the change rows —
+        # sized by change volume, not view size — and truncates the join
+        # lineage so both consumers read the materialized partitions.
+        cdf = cdf.localCheckpoint(eager=True)
     extra = {"base_table": base_name, "base_version": base_cur}
     if cdf.isEmpty():
         pipeline._publish_linked_generation(

@@ -3205,6 +3205,9 @@ def merge_delta(
     float keys respect NaN ordering).  Untouched files stay live — no
     remove, no rewrite, no I/O.  Soundness: a pruned file provably holds
     no matching key, so its rows could only ever be copied verbatim.
+    One pass: the source is pinned once per merge and the join once per
+    attempt when the cdc write reads it too; the clause counts ride the
+    first action over the join and decide the zero-change gate.
 
     Change Data Feed (``write_cdf=True``): the merge also stages the
     spec's Change Data files under ``_change_data/`` (table layout,
@@ -3221,19 +3224,19 @@ def merge_delta(
 
     Returns {version, rows_deleted/updated/inserted/matched_copied,
     files_removed, files_added, files_pruned}."""
-    on = list(on)
-    # the source plan is evaluated several times per merge (duplicate-key
-    # guard, key-bounds agg, partition tuples, metrics, merged write, cdc
-    # write) and again per OCC retry — pin it once; in the streaming
-    # upsert path the source is a windowed dedup of the microbatch, so
-    # without this every merge pays that shuffle ~6x (r11 review #4)
-    source = source.persist()
-    try:
+    from zeta_etl_spark.operators.merge_kernel import Pins
+
+    # the source plan is read several times per merge (duplicate-key
+    # guard, key-bounds agg, partition tuples, the join) and again per OCC
+    # retry — pin it once; in the streaming upsert path the source is a
+    # windowed dedup of the microbatch, so without this every merge pays
+    # that shuffle ~5x (r11 review #4)
+    with Pins() as pins:
         return _merge_delta_pinned(
             spark,
             table,
-            source,
-            on,
+            pins.pin(source),
+            list(on),
             when_matched_update,
             update_condition,
             when_matched_delete,
@@ -3245,9 +3248,8 @@ def merge_delta(
             collect_metrics,
             txn,
             max_retries,
+            pins,
         )
-    finally:
-        source.unpersist()
 
 
 def _merge_delta_pinned(
@@ -3266,6 +3268,7 @@ def _merge_delta_pinned(
     collect_metrics,
     txn,
     max_retries,
+    pins,
 ) -> dict:
     from zeta_etl_spark.operators.merge_kernel import (
         build_merge_plan,
@@ -3522,7 +3525,13 @@ def _merge_delta_pinned(
             tfields=tfields,
             row_tracking=rt or (),
         )
-        metrics: dict = plan.metrics() if collect_metrics else {}
+        # the clause counts ride the first action over the join and decide
+        # the zero-change gate below in every mode
+        counts = plan.observe()
+        if write_cdf:
+            # the cdc write is the join's second consumer: evaluate it once
+            # per attempt (the observation rides this action)
+            plan.joined = pins.pin(plan.joined, eager=True)
 
         # staging uses the POST-evolution metaData so evolved columns get
         # mapping ids/physicalNames before any file is written
@@ -3535,26 +3544,58 @@ def _merge_delta_pinned(
         else:
             staging_meta = meta
 
-        adds = _stage_data_files(
-            _to_physical(
-                _enforce_row_predicates(
-                    _enforce_generated(
-                        plan.merged(), staging_meta, recompute=True
+        def stage_adds() -> list[dict]:
+            return _stage_data_files(
+                _to_physical(
+                    _enforce_row_predicates(
+                        _enforce_generated(
+                            plan.merged(), staging_meta, recompute=True
+                        ),
+                        staging_meta,
+                        "MERGE",
                     ),
                     staging_meta,
-                    "MERGE",
+                    passthrough=rt or (),
                 ),
-                staging_meta,
-                passthrough=rt or (),
-            ),
-            table,
-            phys_pcols,
-            data_change=True,
-            drop_empty=True,
-            stats_exclude=rt or (),
-        )
+                table,
+                phys_pcols,
+                data_change=True,
+                drop_empty=True,
+                stats_exclude=rt or (),
+            )
+
+        # without cdc the data write is the join's only action and fills
+        # the counts; with cdc they are known before any file is staged
+        adds = [] if write_cdf else stage_adds()
+        metrics = counts()
+        # Zero-change gate, computed UNCONDITIONALLY (r11 verdict #1): a
+        # merge whose clauses claimed no row must commit NOTHING — a
+        # dataChange:true remove+add commit would make table_changes
+        # fabricate delete+insert rows for every COPIED row of the
+        # rewritten files.  The observed counts are the signal in every
+        # mode — never the cdc staging side effect (the r11 bug:
+        # write_cdf=False committed spurious rewrites).
+        changed = (
+            metrics["rows_deleted"]
+            + metrics["rows_updated"]
+            + metrics["rows_inserted"]
+        ) > 0
+        if not collect_metrics:
+            metrics = {}
+        if not changed:
+            _discard_staged(table, adds)
+            return _Done(
+                {
+                    "version": base_version,
+                    "files_removed": 0,
+                    "files_added": 0,
+                    "files_pruned": len(live),
+                    **metrics,
+                }
+            )
         cdc_actions: list[dict] = []
         if write_cdf:
+            adds = stage_adds()
             cdc_actions = _stage_data_files(
                 _to_physical(
                     _enforce_generated(
@@ -3569,36 +3610,6 @@ def _merge_delta_pinned(
                 action="cdc",
                 subdir=_CHANGE_DATA_DIR,
                 drop_empty=True,
-            )
-        # Zero-change gate, computed UNCONDITIONALLY (r11 verdict #1): a
-        # merge whose clauses claimed no row must commit NOTHING — a
-        # dataChange:true remove+add commit would make table_changes
-        # fabricate delete+insert rows for every COPIED row of the
-        # rewritten files.  write_cdf=True: the staged cdc files are the
-        # authoritative signal (their rows ARE the changes).  Otherwise
-        # the signal comes from the plan itself — never from the cdc
-        # staging side effect (the r11 bug: write_cdf=False committed
-        # spurious rewrites).
-        if write_cdf:
-            changed = bool(cdc_actions)
-        elif collect_metrics:
-            changed = (
-                metrics["rows_deleted"]
-                + metrics["rows_updated"]
-                + metrics["rows_inserted"]
-            ) > 0
-        else:
-            changed = not plan.changes().isEmpty()
-        if not changed:
-            _discard_staged(table, adds + cdc_actions)
-            return _Done(
-                {
-                    "version": base_version,
-                    "files_removed": 0,
-                    "files_added": 0,
-                    "files_pruned": len(live),
-                    **metrics,
-                }
             )
 
         actions: list[dict] = []

@@ -563,9 +563,9 @@ def foreach_batch_merge_upsert(
     views: Sequence[dict] | None = None,
 ) -> None:
     """Streaming CDC upsert whose per-batch cost is proportional to the
-    BATCH, not the store — the scale successor to
-    :func:`foreach_batch_upsert` (which unions the full store with every
-    microbatch and rewrites it).
+    BATCH, not the store (views included, except on a crash replay — see
+    ``views``) — the scale successor to :func:`foreach_batch_upsert`
+    (which unions the full store with every microbatch and rewrites it).
 
     Layout: a generation-layout table hive-partitioned by
     ``_kb = pmod(xxhash64(keys), n_buckets)``.  Because ``_kb`` is a pure
@@ -592,19 +592,22 @@ def foreach_batch_merge_upsert(
     ``views``: optional incrementally-maintained aggregate views over the
     upsert table (plans/ivm.py) — each ``{"name": ..., "group_cols": [...],
     "measures": [...], "minmax": [...], "delete_predicate": ...}`` is
-    brought up to the
-    base's new generation after every merge via ``sync_agg_view``.  The
-    view's commit record anchors the base generation it reflects, so a
+    brought up to the base's new generation after every merge via
+    ``sync_agg_view``, folding the merge's own change rows (cost ∝ batch).
+    The view's commit record anchors the base generation it reflects, so a
     crash anywhere between the base merge publish and the last view's
-    publish heals on replay (the version-gap CDF is replayed; an
-    already-synced view no-ops), and the streaming checkpoint only ever
-    confirms batches whose downstream views CAN be brought current.  The
-    gold rollups the reference recomputes per trigger become
-    change-volume-cost maintenance.
+    publish heals on replay: a view whose anchor is not the generation
+    the replayed merge read takes the relational version-gap replay (two
+    full base snapshot scans), an already-synced view folds the replay's
+    empty change, and the streaming checkpoint only ever confirms batches
+    whose downstream views CAN be brought current.  The gold rollups the
+    reference recomputes per trigger become change-volume-cost
+    maintenance.
     """
     import json
 
     from zeta_etl_spark.operators.cdc import latest_by_keys
+    from zeta_etl_spark.operators.merge_kernel import Pins
     from zeta_etl_spark.plans.graph import Pipeline
     from zeta_etl_spark.plans.ivm import sync_agg_view
 
@@ -666,7 +669,7 @@ def foreach_batch_merge_upsert(
             _view_node
         )
 
-    def _sync_views(batch_id: int) -> None:
+    def _sync_views(batch_id: int, changes=None) -> None:
         for v in views or ():
             s = sync_agg_view(
                 spark,
@@ -681,6 +684,7 @@ def foreach_batch_merge_upsert(
                 # the merge's duplicate-source guard already enforces key
                 # uniqueness in the base; skip the per-batch recheck jobs
                 check_unique=False,
+                changes=changes,
             )
             if metrics_out is not None:
                 metrics_out.append(
@@ -714,18 +718,29 @@ def foreach_batch_merge_upsert(
                 )
             _sync_views(batch_id)
             return
-        m = p.merge_into(
-            spark,
-            table_name,
-            b,
-            on=["_kb", *keys],
-            when_matched_update="*",
-            update_condition=seq_newer,
-            when_not_matched_insert="*",
-        )
-        if metrics_out is not None:
-            metrics_out.append({"batch_id": batch_id, **m})
-        _sync_views(batch_id)
+        # with views, the merge hands back its change rows (read from its
+        # pinned join, released once every view has folded them)
+        with Pins() as pins:
+            m = p.merge_into(
+                spark,
+                table_name,
+                b,
+                on=["_kb", *keys],
+                when_matched_update="*",
+                update_condition=seq_newer,
+                when_not_matched_insert="*",
+                keep_changes=pins if views else None,
+            )
+            changes = None
+            if views:
+                changes = (
+                    m.pop("read_generation"),
+                    m["generation"],
+                    m.pop("changes"),
+                )
+            if metrics_out is not None:
+                metrics_out.append({"batch_id": batch_id, **m})
+            _sync_views(batch_id, changes)
 
     (
         stream.writeStream.foreachBatch(_merge)

@@ -14,8 +14,9 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 # Slow tier (VERDICT r13 #2): whole modules of long-running conformance /
 # property / crash-matrix drills, auto-marked `slow` so the DEFAULT run
 # (pytest.ini: -m "not slow") completes inside the external driver's
-# window.  Membership chosen from a measured --durations run (the list and
-# numbers are in OPTIMIZATION_r14.md); run the full suite with -m "".
+# window.  Membership is chosen from a measured --durations run: the
+# per-module table is in ROADMAP.md (Open items, "Carried over", item 1).
+# Run the full suite with -m "".
 SLOW_MODULES: set[str] = set()
 
 

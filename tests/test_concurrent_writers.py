@@ -9,7 +9,6 @@ for the lakehouse stand-in.
   generations, last-committer-wins on the pointer, readers never torn.
 - Crash-debris healing is pid-liveness-aware: a LIVE writer's staging is
   never removed by another writer's prepare; dead writers' staging is.
-- The versioned store's commit serializes the same way.
 """
 
 from __future__ import annotations
@@ -154,44 +153,3 @@ def test_healing_spares_live_writer_staging(spark, tmp_path):
     assert not os.path.exists(legacy), "legacy unowned staging is healed"
     os.rmdir(live)
 
-
-def test_versioned_store_concurrent_commits(spark, tmp_path):
-    """Two concurrent snapshot publishes to one store serialize on the
-    commit lock: both complete, the pointer serves exactly one, reads are
-    never torn."""
-    from zeta_etl_spark.sources.versioned_store import (
-        VersionedStoreDataSource,
-    )
-
-    spark.dataSource.register(VersionedStoreDataSource)
-    store = str(tmp_path / "kv")
-    errors: list = []
-
-    def write(tag):
-        try:
-            df = spark.createDataFrame(
-                [(i, tag) for i in range(50)], "k int, src string"
-            )
-            (
-                df.write.format("versioned_store")
-                .mode("overwrite")
-                .option("path", store)
-                .save()
-            )
-        except Exception as e:  # noqa: BLE001
-            errors.append(repr(e))
-
-    t1 = threading.Thread(target=write, args=("a",))
-    t2 = threading.Thread(target=write, args=("b",))
-    t1.start(), t2.start()
-    t1.join(), t2.join()
-
-    assert errors == [], errors
-    got = (
-        spark.read.format("versioned_store")
-        .option("path", store)
-        .load()
-        .collect()
-    )
-    assert len(got) == 50
-    assert len({r.src for r in got}) == 1, "snapshot must be one writer's"

@@ -437,6 +437,55 @@ def test_streaming_upsert_tombstones_crash_replay_e2e(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("deletes", [True, False], ids=["deletes", "upserts"])
+def test_streaming_upsert_late_rows_never_overwrite_newer(
+    spark, tmp_path, deletes
+):
+    """A late row (older sequence than the stored one) must neither update
+    nor delete the key: the sink equals its batch twin
+    latest_by_keys_with_deletes over all events, whatever the arrival
+    order."""
+    from zeta_etl_spark.operators.cdc import latest_by_keys_with_deletes
+    from zeta_etl_spark.sinks.delta_log import foreach_batch_delta_upsert
+    from zeta_etl_spark.sources.json_source import read_json
+
+    src = str(tmp_path / "src")
+    t = str(tmp_path / "t")
+    os.makedirs(src)
+    schema = "k bigint, v double, seq bigint, op string"
+    events = [
+        [{"k": k, "v": float(k), "seq": 5, "op": "u"} for k in (1, 2, 3)],
+        [
+            {"k": 1, "v": 99.0, "seq": 1, "op": "u"},
+            {"k": 2, "v": 0.0, "seq": 1, "op": "d" if deletes else "u"},
+        ],
+    ]
+    for i, batch in enumerate(events):
+        with open(os.path.join(src, f"b{i}.json"), "w") as fh:
+            for e in batch:
+                fh.write(json.dumps(e) + "\n")
+        foreach_batch_delta_upsert(
+            read_json(spark, src, schema, streaming=True),
+            t,
+            str(tmp_path / "ckpt"),
+            app_id="late-rows",
+            keys=["k"],
+            sequence_by=["seq"],
+            apply_as_deletes="op = 'd'" if deletes else None,
+        )
+    twin = latest_by_keys_with_deletes(
+        spark.createDataFrame(
+            [tuple(e.values()) for b in events for e in b], schema
+        ),
+        ["k"],
+        ["seq"],
+        "op = 'd'",
+    )
+    got = read_delta(spark, t).select("k", "v", "seq")
+    assert _rows(got) == _rows(twin.select("k", "v", "seq"))
+    assert _rows(got) == [(1, 1.0, 5), (2, 2.0, 5), (3, 3.0, 5)]
+
+
 def test_zero_change_merge_commits_nothing(spark, tmp_path):
     """r11 review finding #2: a merge whose conditions claim no row must
     not commit a rewrite — a dataChange:true remove+add with no cdc

@@ -168,6 +168,37 @@ def test_sync_agg_view_threads_minmax(spark, tmp_path):
     assert _rows(maintained) == _rows(recomputed)
 
 
+def test_sync_agg_view_releases_its_pins(spark, tmp_path):
+    """The relational change feed and the minmax fold are pinned for one
+    sync and released when it returns: repeated syncs leave the block
+    manager's persistent-RDD set where it started."""
+    p = Pipeline("ivmp", str(tmp_path / "t"))
+
+    @p.table(name="base")
+    def base(pl):
+        return _df(spark, V1)
+
+    @p.table(name="gold")
+    def gold(pl):  # maintained through sync only
+        raise RuntimeError("maintained via sync_agg_view")
+
+    p.run(spark, targets=["base"])
+
+    def sync():
+        return sync_agg_view(
+            spark, p, "gold", "base", keys=["k"], group_cols=["grp"],
+            measures=["qty"], minmax=["qty"],
+        )
+
+    assert sync()["status"] == "seeded"
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for rows in (V2, V1, V2):
+        p._write_overwrite_atomic(p.nodes["base"], _df(spark, rows))
+        assert sync()["status"] == "synced"
+        assert persisted().size() == before
+
+
 def test_minmax_random_edit_scripts(spark, tmp_path):
     """Seeded random transitions: hybrid maintenance == recompute."""
     rng = random.Random(11)

@@ -11,11 +11,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from zeta_etl_spark.sinks.delta_log import read_delta
 from zeta_etl_spark.sources.json_source import read_json
 from zeta_etl_spark.streaming.runner import (
     dedup_stream,
     foreach_batch_upsert,
     hourly_agg_stream,
+    read_upsert_table,
     run_available_now,
 )
 
@@ -139,7 +141,7 @@ def test_foreach_batch_cdc_upsert(spark, tmp_path):
         stream, target, ckpt, keys=["entity"], sequence_by=["indexed_timestamp"],
         spark=spark,
     )
-    t1 = {r["entity"]: r["val"] for r in spark.read.parquet(target).collect()}
+    t1 = {r["entity"]: r["val"] for r in read_upsert_table(spark, target).collect()}
     assert t1 == {"x": 2.0, "y": 9.0}
 
     # second snapshot batch: x updated, z inserted
@@ -156,7 +158,7 @@ def test_foreach_batch_cdc_upsert(spark, tmp_path):
         stream, target, ckpt, keys=["entity"], sequence_by=["indexed_timestamp"],
         spark=spark,
     )
-    t2 = {r["entity"]: r["val"] for r in spark.read.parquet(target).collect()}
+    t2 = {r["entity"]: r["val"] for r in read_upsert_table(spark, target).collect()}
     assert t2 == {"x": 5.0, "y": 9.0, "z": 7.0}
 
 
@@ -358,7 +360,7 @@ def test_two_level_streaming_agg_matches_batch(spark, tmp_path):
         "batch1.json",
     )
     run()
-    l2 = {r["user"]: r for r in spark.read.parquet(out).collect()}
+    l2 = {r["user"]: r for r in read_delta(spark, out).collect()}
     # watermark at 02:25 → only hours 00/01 closed; b's hour-02 row pending
     assert l2["a"]["grand_total"] == 3.0 and l2["a"]["n_hours"] == 2
     assert "b" not in l2
@@ -374,7 +376,7 @@ def test_two_level_streaming_agg_matches_batch(spark, tmp_path):
         "batch2.json",
     )
     run()
-    l2 = {r["user"]: r for r in spark.read.parquet(out).collect()}
+    l2 = {r["user"]: r for r in read_delta(spark, out).collect()}
     assert l2["a"]["grand_total"] == 3.0  # late 100.0 excluded end-to-end
     assert l2["b"]["grand_total"] == 3.0 and l2["b"]["n_hours"] == 1
 
@@ -394,7 +396,7 @@ def test_two_level_streaming_agg_matches_batch(spark, tmp_path):
 
     # idempotence: re-running with no new input leaves level 2 unchanged
     run()
-    again = {r["user"]: r for r in spark.read.parquet(out).collect()}
+    again = {r["user"]: r for r in read_delta(spark, out).collect()}
     assert again.keys() == l2.keys()
     assert all(again[u]["grand_total"] == l2[u]["grand_total"] for u in again)
 
@@ -703,7 +705,12 @@ def test_foreach_batch_upsert_with_deletes(spark, tmp_path):
             stream, target, ckpt, keys=["entity"], sequence_by=["seq"],
             spark=spark, apply_as_deletes="op = 'delete'",
         )
-        return {r["entity"]: r["val"] for r in spark.read.parquet(target).collect()}
+        return {
+            r["entity"]: r["val"]
+            for r in read_upsert_table(
+                spark, target, "op = 'delete'"
+            ).collect()
+        }
 
     _write_json(
         src,
@@ -735,6 +742,42 @@ def test_foreach_batch_upsert_with_deletes(spark, tmp_path):
         "d3.json",
     )
     assert drive() == {"x": 8.0, "y": 11.0}
+
+
+def test_tombstone_contract(spark, tmp_path):
+    """The upsert sink's table KEEPS a tombstone (late rows must not
+    resurrect the key); read_upsert_table filters it at the read surface,
+    with NULL predicates counted as kept."""
+    src = str(tmp_path / "ts_src")
+    target = str(tmp_path / "ts_store")
+    ckpt = str(tmp_path / "ts_ckpt")
+    schema = "k string, ts timestamp, v double, deleted boolean"
+    waves = [
+        [
+            {"k": "a", "ts": "2024-01-01 00:00:00", "v": 1.0, "deleted": False},
+            {"k": "b", "ts": "2024-01-01 00:00:00", "v": 2.0, "deleted": False},
+        ],
+        [
+            {"k": "a", "ts": "2024-01-02 00:00:00", "v": 10.0, "deleted": False},
+            {"k": "c", "ts": "2024-01-02 00:00:00", "v": 3.0, "deleted": None},
+            {"k": "b", "ts": "2024-01-02 00:00:00", "v": 0.0, "deleted": True},
+        ],
+    ]
+    for i, wave in enumerate(waves):
+        _write_json(src, wave, f"w{i}.json")
+        foreach_batch_upsert(
+            read_json(spark, src, schema, streaming=True), target, ckpt,
+            keys=["k"], sequence_by=["ts"], spark=spark,
+            apply_as_deletes="deleted",
+        )
+    raw = {r["k"]: r["deleted"] for r in read_delta(spark, target).collect()}
+    assert raw == {"a": False, "b": True, "c": None}
+    filtered = {
+        r["k"]: r["v"]
+        for r in read_upsert_table(spark, target, "deleted").collect()
+    }
+    assert filtered == {"a": 10.0, "c": 3.0}
+    assert read_upsert_table(spark, target).count() == 3
 
 
 def test_streaming_hll_sketch_maintenance_via_upsert(spark, tmp_path, sf_dir):
@@ -778,7 +821,7 @@ def test_streaming_hll_sketch_maintenance_via_upsert(spark, tmp_path, sf_dir):
 
     got = {
         r["register"]: r["max_rank"]
-        for r in spark.read.parquet(target).collect()
+        for r in read_upsert_table(spark, target).collect()
     }
     from zeta_etl_spark.queries import REGISTRY
 
@@ -824,7 +867,7 @@ def test_foreach_batch_topk_leaderboard(spark, tmp_path):
             k=5, spark=spark,
         )
 
-    got = spark.read.parquet(store)
+    got = read_delta(spark, store)
     # bounded state: never more than groups x k rows durable
     assert got.count() <= 2 * 5
 
@@ -874,12 +917,12 @@ def test_topk_sink_replay_after_crash_is_idempotent(spark, tmp_path):
         )
 
     run()
-    before = sorted(tuple(r) for r in spark.read.parquet(store).collect())
+    before = sorted(tuple(r) for r in read_delta(spark, store).collect())
     assert len(before) == 4
 
     shutil.rmtree(ckpt)  # crash: checkpoint lost, pointer survives
     run()
-    after = sorted(tuple(r) for r in spark.read.parquet(store).collect())
+    after = sorted(tuple(r) for r in read_delta(spark, store).collect())
     assert after == before
 
 
@@ -911,7 +954,7 @@ def test_upsert_and_topk_heal_paths_absorb_new_files(spark, tmp_path):
     stream = read_json(spark, src, snap, streaming=True)
     foreach_batch_upsert(stream, target, ckpt, keys=["entity"],
                          sequence_by=["seq"], spark=spark)
-    got = {r["entity"]: r["val"] for r in spark.read.parquet(target).collect()}
+    got = {r["entity"]: r["val"] for r in read_upsert_table(spark, target).collect()}
     assert got == {"x": 1.0, "y": 9.0}  # y NOT dropped by the heal path
 
     # ---- topk sink ----
@@ -929,7 +972,7 @@ def test_upsert_and_topk_heal_paths_absorb_new_files(spark, tmp_path):
     foreach_batch_topk(stream, store, ckpt2, group_keys=["grp"],
                        id_cols=["item"], order_col="score", k=3, spark=spark)
     rows = {(r["item"], r["score"], r["topk_rank"])
-            for r in spark.read.parquet(store).collect()}
+            for r in read_delta(spark, store).collect()}
     assert rows == {(2, 9.0, 1), (1, 5.0, 2)}
 
 
@@ -980,7 +1023,7 @@ def test_streaming_ddsketch_maintenance_two_level(spark, tmp_path):
     run()
     got = {
         (r["user"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(out).collect()
+        for r in read_delta(spark, out).collect()
     }
     # watermark 02:25 → hours 00 and 01 closed; b's hour-02 row held back;
     # a's two 127-cent rows land in the same bucket cell across two hours
@@ -999,7 +1042,7 @@ def test_streaming_ddsketch_maintenance_two_level(spark, tmp_path):
     run()
     got = {
         (r["user"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(out).collect()
+        for r in read_delta(spark, out).collect()
     }
     assert got == {("a", 7): 2, ("a", 8): 1, ("b", 1): 1}
 
@@ -1083,7 +1126,7 @@ def test_streaming_ohlc_bars_two_level(spark, tmp_path):
         "w2.json",
     )
     run()
-    got = {r["user"]: r for r in spark.read.parquet(out).collect()}
+    got = {r["user"]: r for r in read_delta(spark, out).collect()}
     # closed hours 0,1,2: values 500,100 | 900 | 700 →
     # open=500 (00:10), high=900, low=100, close=700 (02:30), n=4
     a = got["a"]

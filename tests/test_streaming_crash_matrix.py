@@ -2,13 +2,20 @@
 at every seam of its commit protocol and assert exactly-once output after
 resume.
 
-Protocol seams (``zeta_etl_spark.streaming.runner._fault_injection``):
+Protocol seams.  The upsert, two-level and top-k sinks keep their state
+in Delta tables (``runner._commit_state``):
 
-- ``post_stage``   — versioned dir written, nothing committed
-- ``pre_publish``  — derived mirror / level-2 rebuilt, pointer not swapped
-- ``post_publish`` — pointer committed, stream checkpoint NOT yet written
-  (the availableNow replay path: the next run re-delivers the batch and the
-  sink must re-merge idempotently)
+- ``post_stage``   — data files staged, the Delta log commit not written
+  (the log's put-if-absent, ``delta_log._write_commit_atomic``, raises)
+- ``pre_publish``  — two-level: level 1 committed, level 2 not rewritten.
+  Upsert and top-k commit once per batch and keep no mirror, so their
+  ``pre_publish`` case crashes at ``post_publish``
+- ``post_publish`` — the batch's last commit landed, stream checkpoint NOT
+  yet written (the availableNow replay path: the next run re-delivers the
+  batch and the sink must re-merge idempotently)
+
+The CEP partitioned-append sink tags ``post_stage`` and ``post_publish``
+around its one write (``zeta_etl_spark.streaming.runner._fault_injection``).
 
 Method per (operator × seam): run wave 1 clean → arm the fault → wave 2
 crashes at the seam → disarm → rerun (checkpoint resume) → final output
@@ -23,6 +30,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from zeta_etl_spark.sinks import delta_log as dl
+from zeta_etl_spark.sinks.delta_log import read_delta
 from zeta_etl_spark.streaming import runner as runner_mod
 from zeta_etl_spark.streaming.runner import (
     foreach_batch_partitioned_append,
@@ -30,9 +39,18 @@ from zeta_etl_spark.streaming.runner import (
     foreach_batch_two_level_agg,
     foreach_batch_upsert,
     hourly_agg_stream,
+    read_upsert_table,
 )
 
-SEAMS = ["post_stage", "pre_publish", "post_publish"]
+# case seam -> where the fault fires: a runner tag, or LOG_COMMIT (the
+# Delta log's put-if-absent)
+LOG_COMMIT = "log_commit"
+TWO_LEVEL_SEAMS = {
+    "post_stage": LOG_COMMIT,
+    "pre_publish": "pre_publish",
+    "post_publish": "post_publish",
+}
+ONE_COMMIT_SEAMS = {**TWO_LEVEL_SEAMS, "pre_publish": "post_publish"}
 
 
 class Crash(RuntimeError):
@@ -43,6 +61,18 @@ def _arm(monkeypatch, seam: str):
     """Fault that fires ONCE at the chosen seam, then disarms (the resumed
     run must be able to pass the same seam)."""
     fired = {"done": False}
+
+    if seam == LOG_COMMIT:
+        put_if_absent = dl._write_commit_atomic
+
+        def commit(*args, **kwargs):
+            if not fired["done"]:
+                fired["done"] = True
+                raise Crash(seam)
+            return put_if_absent(*args, **kwargs)
+
+        monkeypatch.setattr(dl, "_write_commit_atomic", commit)
+        return fired
 
     def fault(tag):
         if tag == seam and not fired["done"]:
@@ -102,7 +132,7 @@ def _two_level_run(spark, src, out, ckpt):
 def _two_level_read(spark, out):
     return sorted(
         (r.user, r.grand_total, r.n_events)
-        for r in spark.read.parquet(out).collect()
+        for r in read_delta(spark, out).collect()
     )
 
 
@@ -131,7 +161,7 @@ def _topk_run(spark, src, out, ckpt):
 def _topk_read(spark, out):
     return sorted(
         (r.grp, r.item, r.score, r.topk_rank)
-        for r in spark.read.parquet(out).collect()
+        for r in read_delta(spark, out).collect()
     )
 
 
@@ -157,7 +187,7 @@ def _upsert_run(spark, src, out, ckpt):
 
 def _upsert_read(spark, out):
     return sorted(
-        (r.k, r.v, r.seq) for r in spark.read.parquet(out).collect()
+        (r.k, r.v, r.seq) for r in read_upsert_table(spark, out).collect()
     )
 
 
@@ -196,19 +226,21 @@ def _cep_read(spark, out):
 
 OPERATORS = {
     "two_level_agg": (
-        _two_level_run, _two_level_read, AGG_SCHEMA, WAVE1, WAVE2, SEAMS
+        _two_level_run, _two_level_read, AGG_SCHEMA, WAVE1, WAVE2,
+        TWO_LEVEL_SEAMS,
     ),
     "topk": (
-        _topk_run, _topk_read, TOPK_SCHEMA, TOPK_WAVE1, TOPK_WAVE2, SEAMS
+        _topk_run, _topk_read, TOPK_SCHEMA, TOPK_WAVE1, TOPK_WAVE2,
+        ONE_COMMIT_SEAMS,
     ),
     "upsert": (
         _upsert_run, _upsert_read, UPSERT_SCHEMA, UPSERT_WAVE1, UPSERT_WAVE2,
-        SEAMS,
+        ONE_COMMIT_SEAMS,
     ),
     # single-phase protocol: the partition write is the publish
     "cep": (
         _cep_run, _cep_read, CEP_SCHEMA, CEP_WAVE1, CEP_WAVE2,
-        ["post_stage", "post_publish"],
+        {"post_stage": "post_stage", "post_publish": "post_publish"},
     ),
 }
 
@@ -221,7 +253,7 @@ CASES = [
 def test_crash_at_seam_then_resume_is_exactly_once(
     spark, tmp_path, monkeypatch, op, seam
 ):
-    run, read, _schema, wave1, wave2, _seams = OPERATORS[op]
+    run, read, _schema, wave1, wave2, seams = OPERATORS[op]
 
     # clean twin: same two-wave schedule, separate dirs → expected output
     twin_src = str(tmp_path / "twin_src")
@@ -243,7 +275,7 @@ def test_crash_at_seam_then_resume_is_exactly_once(
     run(spark, src, out, ckpt)
 
     _write_json(src, wave2, "wave2.json")
-    fired = _arm(monkeypatch, seam)
+    fired = _arm(monkeypatch, seams[seam])
     with pytest.raises(Exception) as exc_info:
         run(spark, src, out, ckpt)
     # the crash must come from OUR seam, not an unrelated failure
@@ -415,3 +447,32 @@ def test_merge_upsert_views_crash_then_resume_matches_twin(
     # a further no-input run is a no-op
     _mu_run(spark, src, base, ckpt)
     assert _mu_read(spark, base) == expected
+
+
+def test_streaming_state_has_one_table_format():
+    """The streaming sinks keep no second commit protocol beside the Delta
+    log: no ``.version`` pointer, ``__v`` directory or ``os.replace`` in
+    the runner, no versioned-store DataSource, and no session conf that
+    existed only for it."""
+    import ast
+    import importlib.util
+
+    from zeta_etl_spark import session
+
+    with open(runner_mod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    strings = [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    ]
+    assert not [s for s in strings if ".version" in s or "__v" in s]
+    assert not [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "replace"
+        and getattr(n.value, "id", None) == "os"
+    ]
+    assert importlib.util.find_spec(
+        "zeta_etl_spark.sources.versioned_store"
+    ) is None
+    with open(session.__file__) as fh:
+        assert "spark.sql.python.filterPushdown.enabled" not in fh.read()

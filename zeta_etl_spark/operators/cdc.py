@@ -4,8 +4,10 @@ Reference parity: ``dlt.apply_changes(target, source, keys, sequence_by)``
 (zetaflex-pipeline.py:146-151 and 4 more call sites;
 zetadex-referrals-pipeline.py:147-152) collapses a stream of entity snapshots
 to the latest row per key.  Batch form here is a window rank; the streaming
-form is streaming/runner.py:foreach_batch_upsert (foreachBatch + versioned
-idempotent merge).
+forms are streaming/runner.py:foreach_batch_upsert (each microbatch folded
+into a Delta table by latest-wins and committed as one overwrite; tombstones
+kept) and sinks/delta_log.py:foreach_batch_delta_upsert (each microbatch
+merged into a Delta table; tombstones delete).
 
 Scale design: one shuffle on the key columns; with AQE skew-join handling a
 hot key splits automatically.  For 100 TB backfills prefer the
@@ -73,6 +75,34 @@ def latest_by_keys_with_deletes(
     predicate (e.g. ``op = 'delete'`` on a row whose op is NULL) means NOT
     deleted — DLT deletes only where the expression is TRUE, and a bare
     ``filter(~expr)`` would silently drop NULL-evaluating rows."""
-    return latest_by_keys(df, keys, sequence_by).filter(
-        ~F.coalesce(F.expr(apply_as_deletes), F.lit(False))
+    return drop_tombstones(
+        latest_by_keys(df, keys, sequence_by), apply_as_deletes
+    )
+
+
+def drop_tombstones(df: DataFrame, delete_predicate: str | None) -> DataFrame:
+    """The CDC read-surface tombstone contract: rows where
+    ``delete_predicate`` is TRUE are dropped, NULL counts as kept (DLT
+    deletes only where the expression is TRUE).  ``None`` keeps every
+    row."""
+    if delete_predicate is None:
+        return df
+    return df.filter(~F.coalesce(F.expr(delete_predicate), F.lit(False)))
+
+
+def sequence_at_least(sequence_by: Sequence[str]) -> str:
+    """MERGE condition: the source row's (``s``) ``sequence_by`` tuple is
+    lexicographically >= the target row's (``t``) — strict ``>`` on each
+    prefix-equal level, ``>=`` only on the last column.  A MERGE guards
+    its matched clauses with it so a late (older) source row never
+    overwrites a newer target row, and a replayed batch re-merges as a
+    no-op."""
+    last = len(sequence_by) - 1
+    return " OR ".join(
+        "("
+        + " AND ".join(f"s.{c} = t.{c}" for c in sequence_by[:i])
+        + (" AND " if i else "")
+        + f"s.{sequence_by[i]} {'>=' if i == last else '>'} "
+        + f"t.{sequence_by[i]})"
+        for i in range(len(sequence_by))
     )

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, IntegralType
 
+from zeta_etl_spark.operators.cdc import drop_tombstones
+from zeta_etl_spark.operators.merge_kernel import Pins
 from zeta_etl_spark.plans.graph import Pipeline
 
 _ADD = ("insert", "update_postimage")
@@ -225,100 +227,102 @@ def maintain_agg_view(
     group_cols = list(group_cols)
     minmax = list(minmax)
     delta = delta_from_changes(cdf, group_cols, measures, minmax)
-    if minmax:
-        # MIN/MAX are not self-maintainable under retractions: a deleted
-        # row may BE the group extremum.  Insert-only groups merge with
-        # least/greatest (O(delta)); retraction-touched groups recompute
-        # from the CURRENT base snapshot, bounded by those groups' base
-        # rows via a semi join — never view or base size.
-        delta = delta.localCheckpoint(eager=True)  # probe + joins + merge
-        has_retr = bool(delta.filter(F.col("_retracts") > 0).head(1))
-        if has_retr and base_current is None:
-            raise ValueError(
-                "maintain_agg_view: the change batch retracts rows and the "
-                "view maintains MIN/MAX — pass base_current (the base "
-                "table's post-change snapshot) so touched groups can be "
-                "recomputed"
-            )
-        if has_retr:
-            touched = delta.filter(F.col("_retracts") > 0).select(*group_cols)
-            rc_aggs = []
-            for m in minmax:
-                rc_aggs.append(F.min(m).alias(f"{m}_min_rc"))
-                rc_aggs.append(F.max(m).alias(f"{m}_max_rc"))
-            rc = (
-                base_current.join(
-                    touched,
-                    _null_safe_cond(base_current, touched, group_cols),
-                    "left_semi",
+    # the pinned minmax delta is released once the merge has read it
+    with Pins() as pins:
+        if minmax:
+            # MIN/MAX are not self-maintainable under retractions: a deleted
+            # row may BE the group extremum.  Insert-only groups merge with
+            # least/greatest (O(delta)); retraction-touched groups recompute
+            # from the CURRENT base snapshot, bounded by those groups' base
+            # rows via a semi join — never view or base size.
+            delta = pins.pin(delta, eager=True)  # probe + joins + merge
+            has_retr = bool(delta.filter(F.col("_retracts") > 0).head(1))
+            if has_retr and base_current is None:
+                raise ValueError(
+                    "maintain_agg_view: the change batch retracts rows and the "
+                    "view maintains MIN/MAX — pass base_current (the base "
+                    "table's post-change snapshot) so touched groups can be "
+                    "recomputed"
                 )
-                .groupBy(*group_cols)
-                .agg(*rc_aggs)
-            )
-            d, r = delta.alias("d"), rc.alias("r")
-            sel = [d[c] for c in delta.columns] + [
-                r[f"{m}_{mm}_rc"] for m in minmax for mm in ("min", "max")
-            ]
-            delta = d.join(
-                r, _null_safe_cond(d, r, group_cols), "left"
-            ).select(*sel)
-        else:
-            for m in minmax:
-                delta = delta.withColumn(
-                    f"{m}_min_rc", F.lit(None).cast(dict(delta.dtypes)[f"{m}_min_ins"])
-                ).withColumn(
-                    f"{m}_max_rc", F.lit(None).cast(dict(delta.dtypes)[f"{m}_max_ins"])
+            if has_retr:
+                touched = delta.filter(F.col("_retracts") > 0).select(*group_cols)
+                rc_aggs = []
+                for m in minmax:
+                    rc_aggs.append(F.min(m).alias(f"{m}_min_rc"))
+                    rc_aggs.append(F.max(m).alias(f"{m}_max_rc"))
+                rc = (
+                    base_current.join(
+                        touched,
+                        _null_safe_cond(base_current, touched, group_cols),
+                        "left_semi",
+                    )
+                    .groupBy(*group_cols)
+                    .agg(*rc_aggs)
                 )
-    upd: dict[str, str] = {"_n": "t._n + s._n_delta"}
-    ins: dict[str, str] = {
-        **{g: f"s.{g}" for g in group_cols},
-        "_n": "s._n_delta",
-    }
-    for m in measures:
-        # sum: NULL + x must act as 0 + x while n tracks real nullity
-        upd[f"{m}_sum"] = (
-            f"CASE WHEN t.{m}_n + s.{m}_n_delta = 0 THEN NULL "
-            f"ELSE coalesce(t.{m}_sum, 0) + coalesce(s.{m}_sum_delta, 0) END"
+                d, r = delta.alias("d"), rc.alias("r")
+                sel = [d[c] for c in delta.columns] + [
+                    r[f"{m}_{mm}_rc"] for m in minmax for mm in ("min", "max")
+                ]
+                delta = d.join(
+                    r, _null_safe_cond(d, r, group_cols), "left"
+                ).select(*sel)
+            else:
+                for m in minmax:
+                    delta = delta.withColumn(
+                        f"{m}_min_rc", F.lit(None).cast(dict(delta.dtypes)[f"{m}_min_ins"])
+                    ).withColumn(
+                        f"{m}_max_rc", F.lit(None).cast(dict(delta.dtypes)[f"{m}_max_ins"])
+                    )
+        upd: dict[str, str] = {"_n": "t._n + s._n_delta"}
+        ins: dict[str, str] = {
+            **{g: f"s.{g}" for g in group_cols},
+            "_n": "s._n_delta",
+        }
+        for m in measures:
+            # sum: NULL + x must act as 0 + x while n tracks real nullity
+            upd[f"{m}_sum"] = (
+                f"CASE WHEN t.{m}_n + s.{m}_n_delta = 0 THEN NULL "
+                f"ELSE coalesce(t.{m}_sum, 0) + coalesce(s.{m}_sum_delta, 0) END"
+            )
+            upd[f"{m}_n"] = f"t.{m}_n + s.{m}_n_delta"
+            ins[f"{m}_sum"] = f"s.{m}_sum_delta"
+            ins[f"{m}_n"] = f"coalesce(s.{m}_n_delta, 0)"
+        for m in minmax:
+            # least/greatest skip NULLs in Spark SQL, so an all-NULL insert
+            # batch leaves the stored extremum untouched
+            upd[f"{m}_min"] = (
+                f"CASE WHEN s._retracts > 0 THEN s.{m}_min_rc "
+                f"ELSE least(t.{m}_min, s.{m}_min_ins) END"
+            )
+            upd[f"{m}_max"] = (
+                f"CASE WHEN s._retracts > 0 THEN s.{m}_max_rc "
+                f"ELSE greatest(t.{m}_max, s.{m}_max_ins) END"
+            )
+            # a retraction-touched group can be NEW to the view (hand-fed CDFs
+            # — a snapshot diff never produces one): recompute wins there too
+            ins[f"{m}_min"] = (
+                f"CASE WHEN s._retracts > 0 THEN s.{m}_min_rc "
+                f"ELSE s.{m}_min_ins END"
+            )
+            ins[f"{m}_max"] = (
+                f"CASE WHEN s._retracts > 0 THEN s.{m}_max_rc "
+                f"ELSE s.{m}_max_ins END"
+            )
+        return pipeline.merge_into(
+            spark,
+            view_name,
+            delta,
+            on=group_cols,
+            null_safe_on=True,
+            when_matched_delete=True,
+            delete_condition="t._n + s._n_delta = 0",
+            when_matched_update=upd,
+            when_not_matched_insert=ins,
+            # a freshly inserted group with zero net rows (e.g. a CDF slice
+            # that inserts and deletes the same new-group row) must not appear
+            insert_condition="s._n_delta > 0",
+            commit_extra=commit_extra,
         )
-        upd[f"{m}_n"] = f"t.{m}_n + s.{m}_n_delta"
-        ins[f"{m}_sum"] = f"s.{m}_sum_delta"
-        ins[f"{m}_n"] = f"coalesce(s.{m}_n_delta, 0)"
-    for m in minmax:
-        # least/greatest skip NULLs in Spark SQL, so an all-NULL insert
-        # batch leaves the stored extremum untouched
-        upd[f"{m}_min"] = (
-            f"CASE WHEN s._retracts > 0 THEN s.{m}_min_rc "
-            f"ELSE least(t.{m}_min, s.{m}_min_ins) END"
-        )
-        upd[f"{m}_max"] = (
-            f"CASE WHEN s._retracts > 0 THEN s.{m}_max_rc "
-            f"ELSE greatest(t.{m}_max, s.{m}_max_ins) END"
-        )
-        # a retraction-touched group can be NEW to the view (hand-fed CDFs
-        # — a snapshot diff never produces one): recompute wins there too
-        ins[f"{m}_min"] = (
-            f"CASE WHEN s._retracts > 0 THEN s.{m}_min_rc "
-            f"ELSE s.{m}_min_ins END"
-        )
-        ins[f"{m}_max"] = (
-            f"CASE WHEN s._retracts > 0 THEN s.{m}_max_rc "
-            f"ELSE s.{m}_max_ins END"
-        )
-    return pipeline.merge_into(
-        spark,
-        view_name,
-        delta,
-        on=group_cols,
-        null_safe_on=True,
-        when_matched_delete=True,
-        delete_condition="t._n + s._n_delta = 0",
-        when_matched_update=upd,
-        when_not_matched_insert=ins,
-        # a freshly inserted group with zero net rows (e.g. a CDF slice
-        # that inserts and deletes the same new-group row) must not appear
-        insert_condition="s._n_delta > 0",
-        commit_extra=commit_extra,
-    )
 
 
 def _current_version(pipeline: Pipeline, name: str) -> int:
@@ -332,14 +336,6 @@ def _commit_meta(pipeline: Pipeline, name: str, version: int) -> dict:
     """Commit record of an explicit generation — delegates to the
     canonical :meth:`Pipeline.commit_meta_at`."""
     return pipeline.commit_meta_at(name, version)
-
-
-def _not_deleted(df: DataFrame, delete_predicate: str | None) -> DataFrame:
-    """Same tombstone contract as the CDC read surfaces: rows where the
-    predicate is TRUE are excluded, NULL kept."""
-    if delete_predicate is None:
-        return df
-    return df.filter(~F.coalesce(F.expr(delete_predicate), F.lit(False)))
 
 
 def seed_agg_view(
@@ -356,7 +352,7 @@ def seed_agg_view(
     CURRENT generation, stamping that generation into the view's commit
     record — the anchor :func:`sync_agg_view` advances from."""
     base_ver = _current_version(pipeline, base_name)
-    base = _not_deleted(
+    base = drop_tombstones(
         pipeline.read_version(spark, base_name, base_ver), delete_predicate
     )
     view = full_agg(base, group_cols, list(measures), minmax=minmax)
@@ -455,50 +451,52 @@ def sync_agg_view(
             minmax=minmax,
         )
         return {**out, "status": "reseeded_gap_vacuumed"}
-    if changes is not None and changes[:2] == (anchor, base_cur):
-        # the merge's own change rows, read from its pinned join
-        cdf = _not_deleted(changes[2], delete_predicate)
-    else:
-        cdf = _not_deleted(
-            pipeline.table_changes(
-                spark,
-                base_name,
-                anchor,
-                base_cur,
-                keys=keys,
-                check_unique=check_unique,
-            ),
-            delete_predicate,
+    with Pins() as pins:
+        if changes is not None and changes[:2] == (anchor, base_cur):
+            # the merge's own change rows, read from its pinned join
+            cdf = drop_tombstones(changes[2], delete_predicate)
+        else:
+            cdf = drop_tombstones(
+                pipeline.table_changes(
+                    spark,
+                    base_name,
+                    anchor,
+                    base_cur,
+                    keys=keys,
+                    check_unique=check_unique,
+                ),
+                delete_predicate,
+            )
+            # the relational CDF is a full-outer join of two base snapshots,
+            # read by isEmpty here and by the delta fold.  Evaluate it ONCE
+            # (ADVICE r7): the pin materializes the change rows — sized by
+            # change volume, not view size — truncates the join lineage so
+            # both consumers read the materialized partitions, and is
+            # released when the sync returns.
+            cdf = pins.pin(cdf, eager=True)
+        extra = {"base_table": base_name, "base_version": base_cur}
+        if cdf.isEmpty():
+            pipeline._publish_linked_generation(
+                view_name, view_cur, "ivm_sync_noop", **extra
+            )
+            return {"status": "advanced_empty_gap", "base_version": base_cur}
+        base_cur_df = (
+            drop_tombstones(
+                pipeline.read_version(spark, base_name, base_cur),
+                delete_predicate,
+            )
+            if minmax
+            else None
         )
-        # the relational CDF is a full-outer join of two base snapshots,
-        # read by isEmpty here and by the delta fold.  Evaluate it ONCE
-        # (ADVICE r7): localCheckpoint materializes the change rows —
-        # sized by change volume, not view size — and truncates the join
-        # lineage so both consumers read the materialized partitions.
-        cdf = cdf.localCheckpoint(eager=True)
-    extra = {"base_table": base_name, "base_version": base_cur}
-    if cdf.isEmpty():
-        pipeline._publish_linked_generation(
-            view_name, view_cur, "ivm_sync_noop", **extra
+        m = maintain_agg_view(
+            spark,
+            pipeline,
+            view_name,
+            cdf,
+            group_cols,
+            measures,
+            commit_extra=extra,
+            minmax=minmax,
+            base_current=base_cur_df,
         )
-        return {"status": "advanced_empty_gap", "base_version": base_cur}
-    base_cur_df = (
-        _not_deleted(
-            pipeline.read_version(spark, base_name, base_cur),
-            delete_predicate,
-        )
-        if minmax
-        else None
-    )
-    m = maintain_agg_view(
-        spark,
-        pipeline,
-        view_name,
-        cdf,
-        group_cols,
-        measures,
-        commit_extra=extra,
-        minmax=minmax,
-        base_current=base_cur_df,
-    )
-    return {**m, "status": "synced", "base_version": base_cur}
+        return {**m, "status": "synced", "base_version": base_cur}

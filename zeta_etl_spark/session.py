@@ -84,9 +84,6 @@ def get_spark(
         # AQE runtime-broadcasts anything that turns out small.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Python DataSource pushFilters (sources/versioned_store.py) is
-        # rejected outright by Spark unless this session-wide flag is on
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # field-id resolution for id-mode column-mapped Delta tables
         # (sinks/delta_log.py).  Set at session setup BY DESIGN (ADVICE

@@ -5816,7 +5816,15 @@ def foreach_batch_delta_upsert(
     commit — update matched, insert unmatched, and, when
     ``apply_as_deletes`` (a SQL predicate over the source row, e.g.
     ``"op = 'delete'"``) marks the winner, DELETE matched (an unmatched
-    tombstone inserts nothing).
+    tombstone inserts nothing).  The matched update and delete fire only
+    when the source sequence is >= the target's
+    (:func:`~zeta_etl_spark.operators.cdc.sequence_at_least`), so a late
+    row older than the stored one is a no-op, as in the batch twin
+    ``latest_by_keys_with_deletes``.  The limit that remains: a delete is
+    physical, so a late row OLDER than it finds no target row and
+    re-inserts the key —
+    :func:`~zeta_etl_spark.streaming.runner.foreach_batch_upsert` keeps
+    tombstones for that case.
 
     Exactly-once: the merge commit carries ``txn(app_id, batch_id)``; a
     crash-replayed microbatch is detected from the table's own log and
@@ -5828,9 +5836,10 @@ def foreach_batch_delta_upsert(
     :func:`table_changes` / :func:`read_delta_incremental(mode='cdf')` —
     the merge commits carry cdc files, so updates arrive as
     preimage/postimage pairs, not as whole-file rewrites."""
-    from zeta_etl_spark.operators.cdc import latest_by_keys
+    from zeta_etl_spark.operators.cdc import latest_by_keys, sequence_at_least
 
     keys = list(keys)
+    seq_newer = sequence_at_least(sequence_by)
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         exists = bool(_list_versions(table) or _list_checkpoints(table))
@@ -5861,6 +5870,7 @@ def foreach_batch_delta_upsert(
                 latest,
                 on=keys,
                 when_matched_update="*",
+                update_condition=seq_newer,
                 when_not_matched_insert="*",
                 txn=(app_id, batch_id),
             )
@@ -5880,9 +5890,9 @@ def foreach_batch_delta_upsert(
                 latest.withColumn("__del", is_del),
                 on=keys,
                 when_matched_update={c: f"s.{c}" for c in tcols},
-                update_condition="not s.__del",
+                update_condition=f"not s.__del AND ({seq_newer})",
                 when_matched_delete=True,
-                delete_condition="s.__del",
+                delete_condition=f"s.__del AND ({seq_newer})",
                 when_not_matched_insert={c: f"s.{c}" for c in tcols},
                 insert_condition="not s.__del",
                 txn=(app_id, batch_id),

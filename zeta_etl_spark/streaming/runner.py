@@ -28,12 +28,68 @@ def _fault_injection(tag: str) -> None:
     """Crash-injection seam for tests (no-op in production).
 
     The foreachBatch sinks call this at each point of their commit
-    protocol — ``post_stage`` (versioned dir written), ``pre_publish``
-    (derived mirror/level-2 rebuilt, pointer not yet swapped),
-    ``post_publish`` (pointer committed, stream checkpoint NOT yet) — so
-    the crash-matrix test (tests/test_streaming_crash_matrix.py) can kill
-    the writer at every seam and assert exactly-once output after
-    resume."""
+    protocol so the crash-matrix test (tests/test_streaming_crash_matrix.py)
+    can kill the writer at every seam and assert exactly-once output after
+    resume.  The Delta-state sinks (upsert, two-level agg, top-k) commit
+    through ``write_delta``; their seams are:
+
+    - staged, not committed: no tag here — the test forces the Delta log's
+      put-if-absent (``sinks.delta_log._write_commit_atomic``) to raise;
+    - ``pre_publish`` (two-level agg only): level 1 committed, level 2 not
+      yet rewritten;
+    - ``post_publish``: the batch's last commit landed, the stream
+      checkpoint NOT yet.
+
+    :func:`foreach_batch_partitioned_append` tags ``post_stage`` before
+    its single write and ``post_publish`` after it."""
+
+
+def _drain(stream: DataFrame, checkpoint: str, fn) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every available microbatch of
+    ``stream`` (availableNow trigger) and block until done."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _union_state(state: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """The committed state plus the batch, in the state's column order."""
+    if state is None:
+        return batch_df
+    return state.unionByName(batch_df.select(*state.columns))
+
+
+def _commit_state(spark: SparkSession, table: str, fold) -> None:
+    """Commit ``fold(state)`` as one Delta overwrite of ``table``, where
+    ``state`` is the committed snapshot (None before the first commit).
+
+    The overwrite is the atomic commit point: a crash before it leaves
+    the last committed version live, and the replayed batch re-folds.  A
+    replay is never skipped (no ``txn`` action): after a checkpoint loss
+    the replanned batch can carry files the state never saw, and every
+    fold here is idempotent, so re-merging re-delivered rows is a no-op
+    while new rows land.  Files that no longer belong to the current
+    version (the superseded one, a crashed attempt's staged files) are
+    vacuumed first, so at most one superseded version stays on disk."""
+    from zeta_etl_spark.sinks.delta_log import (
+        latest_version,
+        read_delta,
+        vacuum,
+        write_delta,
+    )
+
+    try:
+        latest_version(table)
+    except FileNotFoundError:
+        state = None
+    else:
+        vacuum(table, retention_ms=0)
+        state = read_delta(spark, table)
+    write_delta(fold(state), table, mode="overwrite", checkpoint_interval=10)
 
 
 def run_available_now(
@@ -99,95 +155,36 @@ def foreach_batch_upsert(
     spark: SparkSession,
     apply_as_deletes: str | None = None,
 ) -> None:
-    """Streaming latest-wins CDC sink: merge each microbatch into the target
-    parquet (open-source stand-in for apply_changes / Delta MERGE — S8/T7).
+    """Streaming latest-wins CDC sink (apply_changes — S8/T7): each
+    microbatch unions the committed state with the batch, keeps the latest
+    row per key, and commits the result as a Delta overwrite of
+    ``target_path`` (crash story: :func:`_commit_state`).
 
-    Each microbatch unions the current target with the batch and keeps the
-    latest row per key.  On Delta-capable deployments this becomes a real
-    MERGE INTO; locally the crash-safety Delta's log provides comes from
-    versioned directories + an atomic pointer file:
-
-    - each merge WRITES a fresh ``{target}__v{batch_id}`` dir, READS only the
-      last pointer-committed version (never a possibly-partial write), and
-      commits by ``os.replace`` of the pointer — atomic on POSIX.
-    - a crash at any point leaves the pointer naming a complete version; the
-      availableNow checkpoint replays the uncommitted batch, which re-merges
-      idempotently (latest-wins by key).
-    - ``target_path`` itself is maintained as a convenience mirror for plain
-      ``spark.read.parquet`` readers; it is rebuilt from the committed
-      version, so a torn mirror heals on the next batch.
-
-    SCOPE: pointer/rename ops use the local filesystem (this runner's
-    deployment surface).  On HDFS/S3 this seam is where Delta/Iceberg (or
-    Hadoop FileSystem rename) replaces the pointer file.
+    Delete markers STAY in the table as tombstones, so a late row older
+    than the delete cannot resurrect the key; readers drop them with
+    :func:`read_upsert_table` and the same ``apply_as_deletes`` predicate
+    (the DLT contract: NULL = not deleted).  The predicate is resolved
+    against the stream's schema here, so a typo fails at sink start.
+    :func:`~zeta_etl_spark.sinks.delta_log.foreach_batch_delta_upsert` is
+    the physical-delete twin, and :func:`foreach_batch_merge_upsert` the
+    one whose per-batch cost follows the batch, not the state.
     """
-    import shutil
-
     from zeta_etl_spark.operators.cdc import latest_by_keys
 
-    ptr_path = target_path + ".version"
-
-    def _committed_version() -> str | None:
-        if not os.path.exists(ptr_path):
-            return None
-        with open(ptr_path) as fh:
-            return fh.read().strip()
+    if apply_as_deletes is not None:
+        stream.select(F.expr(apply_as_deletes))  # analysis only, no job
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        current_ver = _committed_version()
-        # A replayed batch id (crash after pointer commit before the
-        # stream checkpoint, or full checkpoint loss) is NOT skipped: after
-        # checkpoint loss the replanned batch can contain files the
-        # committed version never saw, so the only safe move is to merge
-        # batch_df again — latest-wins by key makes the re-merge
-        # idempotent for re-delivered rows while new rows land.  The
-        # rewritten version gets an 'h' (heal) suffix so it never
-        # overwrites the directory it is reading from.
-        if current_ver is not None and (
-            current_ver == str(batch_id)
-            or current_ver.startswith(f"{batch_id}h")
-        ):
-            new_ver = current_ver + "h"
-        else:
-            new_ver = str(batch_id)
-        if current_ver is not None:
-            current = spark.read.parquet(f"{target_path}__v{current_ver}")
-            merged = current.unionByName(batch_df.select(*current.columns))
-        else:
-            merged = batch_df
-        out = latest_by_keys(merged, keys, sequence_by)
-        new_dir = f"{target_path}__v{new_ver}"
-        out.write.mode("overwrite").parquet(new_dir)
-        _fault_injection("post_stage")
-        # refresh the reader mirror BEFORE the commit point: a torn mirror is
-        # recoverable (rebuilt from the committed version), a torn version
-        # dir named by the pointer would not be.  Delete markers STAY in the
-        # versioned store as tombstones (so a late-arriving row older than
-        # the delete cannot resurrect the key) and are filtered only here,
-        # on the reader surface — the DLT apply_as_deletes contract.
-        mirror = spark.read.parquet(new_dir)
-        if apply_as_deletes:
-            # NULL predicate = not deleted (DLT deletes only where TRUE)
-            mirror = mirror.filter(
-                ~F.coalesce(F.expr(apply_as_deletes), F.lit(False))
-            )
-        mirror.write.mode("overwrite").parquet(target_path)
-        _fault_injection("pre_publish")
-        tmp_ptr = ptr_path + ".tmp"
-        with open(tmp_ptr, "w") as fh:
-            fh.write(new_ver)
-        os.replace(tmp_ptr, ptr_path)  # atomic commit point
+        _commit_state(
+            spark,
+            target_path,
+            lambda state: latest_by_keys(
+                _union_state(state, batch_df), keys, sequence_by
+            ),
+        )
         _fault_injection("post_publish")
-        if current_ver is not None:
-            shutil.rmtree(f"{target_path}__v{current_ver}", ignore_errors=True)
 
-    (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint, _merge)
 
 
 def foreach_batch_two_level_agg(
@@ -208,16 +205,18 @@ def foreach_batch_two_level_agg(
       :func:`hourly_agg_stream` in append mode) — rows arrive exactly once
       per closed window, so they are immutable facts keyed by
       ``first_keys``.
-    - each microbatch merges those rows into a durable level-1 store
-      (versioned dirs + atomic pointer, same crash story as
-      :func:`foreach_batch_upsert`; replayed batches dedup by key), then
-      recomputes ``second_level`` — ANY batch transform, typically the
-      agg-on-agg — from the full level-1 state into ``target_path``.
+    - each microbatch merges those rows into a level-1 Delta table at
+      ``target_path + "__level1"`` (key dedup, so replayed batches are a
+      no-op; crash story: :func:`_commit_state`), then recomputes
+      ``second_level`` — ANY batch transform, typically the agg-on-agg —
+      from the full level-1 state as a Delta overwrite of
+      ``target_path``.
 
     Idempotence: a replayed microbatch re-merges rows already present
-    (key dedup → no-op) and rebuilds the same level-2 output.  Late data:
-    rows dropped by the level-1 watermark never reach level 2, so both
-    levels agree on the same event-time cut.
+    (key dedup → no-op) and rebuilds the same level-2 output; a crash
+    between the two commits leaves level 2 one batch behind until the
+    replay rebuilds it.  Late data: rows dropped by the level-1 watermark
+    never reach level 2, so both levels agree on the same event-time cut.
 
     Scale: level-1 state is one row per closed (window, key) — orders of
     magnitude smaller than the input stream — so the per-batch level-2
@@ -225,65 +224,29 @@ def foreach_batch_two_level_agg(
     ``second_level`` callable can itself aggregate incrementally from the
     batch argument instead of the full state.
     """
-    import shutil
+    from zeta_etl_spark.sinks.delta_log import read_delta
 
     l1_path = target_path + "__level1"
-    ptr_path = l1_path + ".version"
-
-    def _committed_version() -> str | None:
-        if not os.path.exists(ptr_path):
-            return None
-        with open(ptr_path) as fh:
-            return fh.read().strip()
-
-    def _rebuild_l2(l1_dir: str) -> None:
-        out = second_level(spark.read.parquet(l1_dir))
-        out.write.mode("overwrite").parquet(target_path)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        current_ver = _committed_version()
-        # a replayed batch id is re-MERGED, never skipped: after checkpoint
-        # loss the replanned batch can contain rows the committed version
-        # never saw (same rationale as foreach_batch_upsert); key dedup
-        # makes re-delivered rows a no-op.  Heal versions get an 'h'
-        # suffix so the rewrite never overwrites its own input dir.
-        if current_ver is not None and (
-            current_ver == str(batch_id)
-            or current_ver.startswith(f"{batch_id}h")
-        ):
-            new_ver = current_ver + "h"
-        else:
-            new_ver = str(batch_id)
-        if current_ver is not None:
-            current = spark.read.parquet(f"{l1_path}__v{current_ver}")
-            merged = current.unionByName(batch_df.select(*current.columns))
-        else:
-            merged = batch_df
         # closed-window rows are immutable → replays carry identical rows;
         # key dedup makes the merge idempotent
-        out = merged.dropDuplicates(list(first_keys))
-        new_dir = f"{l1_path}__v{new_ver}"
-        out.write.mode("overwrite").parquet(new_dir)
-        _fault_injection("post_stage")
-        # level 2 is a derived mirror: rebuild BEFORE the commit point (a
-        # torn level-2 heals from the committed level-1 on the next batch)
-        _rebuild_l2(new_dir)
+        _commit_state(
+            spark,
+            l1_path,
+            lambda state: _union_state(state, batch_df).dropDuplicates(
+                list(first_keys)
+            ),
+        )
         _fault_injection("pre_publish")
-        tmp_ptr = ptr_path + ".tmp"
-        with open(tmp_ptr, "w") as fh:
-            fh.write(new_ver)
-        os.replace(tmp_ptr, ptr_path)  # atomic commit point
+        _commit_state(
+            spark,
+            target_path,
+            lambda _: second_level(read_delta(spark, l1_path)),
+        )
         _fault_injection("post_publish")
-        if current_ver is not None:
-            shutil.rmtree(f"{l1_path}__v{current_ver}", ignore_errors=True)
 
-    (
-        first_level.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(first_level, checkpoint, _merge)
 
 
 def foreach_batch_incremental_dedup(
@@ -385,13 +348,7 @@ def foreach_batch_incremental_dedup(
             os.path.join(pairs_root, f"batch={batch_id}")
         )
 
-    (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(doc_stream, checkpoint, _process)
 
 
 def hopping_agg_stream(
@@ -441,77 +398,35 @@ def foreach_batch_topk(
     a perpetual leaderboard affordable; everything below rank k is
     discarded at the merge, never re-read).
 
-    Crash story = foreach_batch_upsert's: versioned dirs + atomic pointer
-    commit + reader mirror; a replayed batch re-merges into the same
-    version and re-commits identically.
+    The leaderboard is a Delta table at ``target_path``, one overwrite per
+    microbatch (crash story: :func:`_commit_state`); a replayed batch
+    re-merges to the same rows.
     """
-    import shutil
-
     from pyspark.sql.window import Window
 
-    ptr_path = target_path + ".version"
-
-    def _committed_version() -> str | None:
-        if not os.path.exists(ptr_path):
-            return None
-        with open(ptr_path) as fh:
-            return fh.read().strip()
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        current_ver = _committed_version()
-        # a replayed batch id is re-MERGED, never skipped: after checkpoint
-        # loss the replanned batch can contain rows the committed version
-        # never saw; the merge is idempotent (max per key), so re-merging
-        # is always safe.  Heal versions get an 'h' suffix so the rewrite
-        # never overwrites the directory it reads.
-        if current_ver is not None and (
-            current_ver == str(batch_id)
-            or current_ver.startswith(f"{batch_id}h")
-        ):
-            new_ver = current_ver + "h"
-        else:
-            new_ver = str(batch_id)
-        if current_ver is not None:
-            current = spark.read.parquet(
-                f"{target_path}__v{current_ver}"
-            ).drop("topk_rank")
-            merged = current.unionByName(batch_df.select(*current.columns))
-        else:
-            merged = batch_df
+    def _fold(state: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        if state is not None:
+            state = state.drop("topk_rank")
         # keyed dedup: max order_col per (group, id) — update-safe
-        best = merged.groupBy(*group_keys, *id_cols).agg(
-            F.max(order_col).alias(order_col)
-        )
+        best = _union_state(state, batch_df).groupBy(
+            *group_keys, *id_cols
+        ).agg(F.max(order_col).alias(order_col))
         w = Window.partitionBy(*group_keys).orderBy(
             F.col(order_col).desc(), *id_cols
         )
-        out = (
+        return (
             best.withColumn("topk_rank", F.row_number().over(w))
             .filter(F.col("topk_rank") <= k)
             .withColumn("topk_rank", F.col("topk_rank").cast("bigint"))
         )
-        new_dir = f"{target_path}__v{new_ver}"
-        out.write.mode("overwrite").parquet(new_dir)
-        _fault_injection("post_stage")
-        spark.read.parquet(new_dir).write.mode("overwrite").parquet(
-            target_path
-        )
-        _fault_injection("pre_publish")
-        tmp_ptr = ptr_path + ".tmp"
-        with open(tmp_ptr, "w") as fh:
-            fh.write(new_ver)
-        os.replace(tmp_ptr, ptr_path)  # atomic commit point
-        _fault_injection("post_publish")
-        if current_ver is not None:
-            shutil.rmtree(f"{target_path}__v{current_ver}", ignore_errors=True)
 
-    (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        _commit_state(
+            spark, target_path, lambda state: _fold(state, batch_df)
+        )
+        _fault_injection("post_publish")
+
+    _drain(stream, checkpoint, _merge)
 
 
 def foreach_batch_partitioned_append(
@@ -527,7 +442,7 @@ def foreach_batch_partitioned_append(
     crash after the partition write but before the stream checkpoint —
     rewrites the same directory with the same rows, so readers of
     ``target_path`` never see a row twice.  Used for append-shaped stateful
-    output (the CEP detector's matches) where the versioned-pointer sinks'
+    output (the CEP detector's matches) where the Delta-state sinks'
     full-state rewrite would be wasteful.  Same caveat as every
     batch-id-keyed scheme: after a full CHECKPOINT LOSS batch ids restart
     at 0 and the contract is void — keep the checkpoint with the data.
@@ -541,13 +456,7 @@ def foreach_batch_partitioned_append(
         # single-phase protocol: the partition write IS the publish
         _fault_injection("post_publish")
 
-    (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint, _write)
 
 
 def foreach_batch_merge_upsert(
@@ -606,7 +515,7 @@ def foreach_batch_merge_upsert(
     """
     import json
 
-    from zeta_etl_spark.operators.cdc import latest_by_keys
+    from zeta_etl_spark.operators.cdc import latest_by_keys, sequence_at_least
     from zeta_etl_spark.operators.merge_kernel import Pins
     from zeta_etl_spark.plans.graph import Pipeline
     from zeta_etl_spark.plans.ivm import sync_agg_view
@@ -691,17 +600,7 @@ def foreach_batch_merge_upsert(
                     {"batch_id": batch_id, "view": v["name"], **s}
                 )
 
-    # lexicographic "source sequence >= target sequence": strict > on each
-    # prefix-equal level, >= only on the last column
-    last = len(sequence_by) - 1
-    seq_newer = " OR ".join(
-        "("
-        + " AND ".join(f"s.{c} = t.{c}" for c in sequence_by[:i])
-        + (" AND " if i else "")
-        + f"s.{sequence_by[i]} {'>=' if i == last else '>'} "
-        + f"t.{sequence_by[i]})"
-        for i in range(len(sequence_by))
-    )
+    seq_newer = sequence_at_least(sequence_by)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         b = latest_by_keys(batch_df, keys, sequence_by).withColumn(
@@ -742,13 +641,18 @@ def foreach_batch_merge_upsert(
                 metrics_out.append({"batch_id": batch_id, **m})
             _sync_views(batch_id, changes)
 
-    (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, checkpoint, _merge)
+
+
+def read_upsert_table(
+    spark: SparkSession, target_path: str, delete_predicate: str | None = None
+) -> DataFrame:
+    """Reader for a :func:`foreach_batch_upsert` table: the committed
+    Delta snapshot with tombstones dropped (NULL predicate = kept)."""
+    from zeta_etl_spark.operators.cdc import drop_tombstones
+    from zeta_etl_spark.sinks.delta_log import read_delta
+
+    return drop_tombstones(read_delta(spark, target_path), delete_predicate)
 
 
 def read_merge_upsert_table(
@@ -760,15 +664,13 @@ def read_merge_upsert_table(
     """Reader for a :func:`foreach_batch_merge_upsert` table: resolves the
     committed generation once (snapshot isolation), drops the internal
     ``_kb`` bucket column, and filters tombstones at the read surface
-    (NULL predicate = kept — the same contract as read_versioned_store)."""
+    (NULL predicate = kept — the same contract as read_upsert_table)."""
+    from zeta_etl_spark.operators.cdc import drop_tombstones
+
     df = spark.read.parquet(
         os.path.realpath(os.path.join(target_base, table_name))
     ).drop("_kb")
-    if delete_predicate:
-        df = df.filter(
-            ~F.coalesce(F.expr(delete_predicate), F.lit(False))
-        )
-    return df
+    return drop_tombstones(df, delete_predicate)
 
 
 def run_delta_stream(

@@ -374,6 +374,53 @@ def test_pipeline_publish_delta_mirrors_runs(spark, tmp_path):
     assert os.path.isdir(os.path.join(d, "cat=a"))
 
 
+def test_pipeline_table_reaches_delta_table_operations(spark, tmp_path):
+    """A Pipeline table gets OPTIMIZE/ZORDER, VACUUM, SHALLOW CLONE,
+    TIMESTAMP AS OF and its full history from its ``publish_delta``
+    mirror — the one place those operations are implemented."""
+    from zeta_etl_spark.plans.graph import Pipeline
+    from zeta_etl_spark.sinks.delta_log import clone_delta, vacuum
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", "cat", "v").collect())
+
+    state = {"hi": 4}
+    p = Pipeline("ops", str(tmp_path / "gen"))
+
+    @p.table(name="t", publish_delta=True, partition_by=("cat",))
+    def t(pl):
+        return _range_df(spark, 0, state["hi"])
+
+    p.run(spark)
+    state["hi"] = 9
+    p.run(spark)
+    d = p.delta_path("t")
+    first, live = rows(_range_df(spark, 0, 4)), rows(_range_df(spark, 0, 9))
+    assert rows(read_delta(spark, d)) == live
+
+    hist = delta_history(d)  # newest first
+    assert [h["version"] for h in hist] == [1, 0]
+    assert hist[0]["timestamp"] > hist[1]["timestamp"]
+    assert rows(read_delta(spark, d, timestamp_ms=hist[1]["timestamp"])) == (
+        first
+    )
+
+    optimize(spark, d, zorder_by=("k", "v"))
+    assert delta_history(d)[0]["operation"] == "OPTIMIZE"
+    assert rows(read_delta(spark, d)) == live
+
+    clone = str(tmp_path / "clone")
+    clone_delta(d, clone, version=0)
+    assert rows(read_delta(spark, clone)) == first
+    with pytest.raises(ValueError, match="not in table history"):
+        clone_delta(d, str(tmp_path / "late"), version=9)
+    with pytest.raises(FileNotFoundError, match="not a Delta table"):
+        clone_delta(str(tmp_path / "ghost"), str(tmp_path / "x"))
+
+    assert vacuum(d, retention_ms=0)  # superseded files of runs 1 and 2
+    assert rows(read_delta(spark, d)) == live
+
+
 def test_pipeline_publish_delta_rejects_incremental(spark, tmp_path):
     from zeta_etl_spark.plans.graph import Pipeline
 

@@ -120,17 +120,6 @@ def test_seal_without_publish_heals_on_next_prepare(
     assert _read_rows(spark, path) == sorted(NEW)
 
 
-def test_vacuum_heals_lost_pointer(spark, tmp_path):
-    base = str(tmp_path / "p")
-    holder = {"rows": OLD}
-    p = _make_pipeline(base, holder)
-    p.run(spark)
-    path = p.path("tbl")
-    os.remove(path)  # pointer lost; generations intact
-    p.vacuum("tbl")
-    assert _read_rows(spark, path) == sorted(OLD)
-
-
 def test_legacy_real_dir_is_migrated_once(spark, tmp_path):
     """A pre-existing in-place table (legacy layout) is adopted as a sealed
     prior generation; subsequent overwrites are fully atomic."""
@@ -199,22 +188,6 @@ def test_partitioned_overwrite_is_atomic_too(spark, tmp_path):
     # hive layout survives inside the generation
     target = os.readlink(path)
     assert any(d.startswith("d=") for d in os.listdir(target))
-
-
-def test_compact_on_generation_layout_stays_atomic(spark, tmp_path):
-    base = str(tmp_path / "p")
-    holder = {"rows": [(i, f"v{i}") for i in range(100)]}
-    p = _make_pipeline(base, holder)
-    p.run(spark)
-    path = p.path("tbl")
-    before = _read_rows(spark, path)
-    n_files = p.compact(spark, "tbl", target_rows_per_file=1000)
-    assert n_files == 1
-    assert os.path.islink(path), "compact must keep the atomic layout"
-    assert _read_rows(spark, path) == before
-    # no legacy side dirs were created
-    assert not os.path.exists(path + "__compacting")
-    assert not os.path.exists(path + "__old")
 
 
 def test_append_mode_keeps_in_place_layout(spark, tmp_path):
@@ -300,9 +273,9 @@ def test_history_records_commits(spark, tmp_path):
     assert all(h["operation"] == "overwrite" for h in hist)
     assert all(h["files"] > 0 and h["bytes"] > 0 for h in hist)
     assert [h["is_current"] for h in hist] == [False, True]
-    p.compact(spark, "tbl", target_rows_per_file=1000)
+    p.restore(spark, "tbl", 1)
     hist = p.history("tbl")
-    assert hist[-1]["operation"] == "compact" and hist[-1]["is_current"]
+    assert hist[-1]["operation"] == "restore" and hist[-1]["is_current"]
 
 
 def test_schema_evolution_across_generations(spark, tmp_path):
@@ -387,155 +360,73 @@ def test_concurrent_reader_never_torn_under_live_publishes(spark, tmp_path):
     assert not torn, f"reader observed non-published states: {torn[:2]}"
 
 
-# --- OPTIMIZE ... ZORDER BY (compact zorder_by=) -----------------------------
+def test_backfill_publishes_a_new_generation(spark, tmp_path):
+    """Backfill stages the rebuilt partitions beside hard links of the
+    untouched ones and publishes them as a new generation: the sealed
+    generation it read, and time travel to it, never change."""
+    base = str(tmp_path / "p")
+    state = {"v": 1}
+    p = Pipeline("bfg", base)
 
-
-def test_compact_zorder_clusters_both_dimensions(spark, tmp_path):
-    """Z-order compaction: every output file covers a small rectangle of
-    the 2-D key space — per-file spans of BOTH columns shrink vs a linear
-    sort, which leaves the second column full-range in every file."""
-    import math
-
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    N, FILES = 40_000, 16
-    p = Pipeline("zo", str(tmp_path / "p"))
-
-    @p.table(name="tbl")
-    def tbl(pl):
-        # two independent uniform dimensions (decorrelated via md5-ish mix)
-        return (
-            spark.range(N)
-            .select(
-                (F.col("id") % 200).alias("x"),
-                ((F.col("id") * 48271) % 200).alias("y"),
-                F.col("id").alias("payload"),
-            )
+    @p.table(name="daily", partition_by=["dt"])
+    def daily(pl):
+        return pl._spark.createDataFrame(
+            [("2024-01-01", 1, state["v"]), ("2024-01-02", 2, state["v"])],
+            "dt string, k bigint, v bigint",
         )
 
-    p.run(spark, targets=["tbl"])
+    def rows(df):
+        return sorted((str(r.dt), r.k, r.v) for r in df.collect())
 
-    def file_spans(path):
-        real = os.path.realpath(path)
-        spans = []
-        for f in sorted(os.listdir(real)):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(real, f)).metadata
-            cols = {
-                md.schema.column(i).path: i for i in range(md.num_columns)
-            }
-            mins, maxs = {}, {}
-            for g in range(md.num_row_groups):
-                for cname in ("x", "y"):
-                    stc = md.row_group(g).column(cols[cname]).statistics
-                    mins[cname] = min(mins.get(cname, stc.min), stc.min)
-                    maxs[cname] = max(maxs.get(cname, stc.max), stc.max)
-            spans.append(
-                (maxs["x"] - mins["x"] + 1, maxs["y"] - mins["y"] + 1)
-            )
-        return spans
+    p.run(spark)
+    v_before = p.live_version("daily")
+    sealed = rows(p.read_version(spark, "daily", v_before))
+    assert sealed == [("2024-01-01", 1, 1), ("2024-01-02", 2, 1)]
 
-    before = sorted((r.x, r.y, r.payload) for r in p.read_table(spark, "tbl").collect())
-
-    # linear sort baseline: x is clustered, y is full-range in every file
-    p.compact(spark, "tbl", target_rows_per_file=N // FILES, sort_by=["x"])
-    linear = file_spans(p.path("tbl"))
-    assert all(sy >= 150 for _sx, sy in linear)  # y unclustered
-
-    n_files = p.compact(
-        spark, "tbl", target_rows_per_file=N // FILES, zorder_by=("x", "y")
-    )
-    assert n_files == FILES
-    after = sorted((r.x, r.y, r.payload) for r in p.read_table(spark, "tbl").collect())
-    assert after == before  # rewrite-only, no row changes
-
-    zspans = file_spans(p.path("tbl"))
-    assert len(zspans) == FILES
-    # the discriminator is the PER-DIMENSION span: linear sort leaves y
-    # full-range (~200) in every file; z-order bounds BOTH dimensions on
-    # average.  (Per-file area is not asserted: a file whose z-range
-    # straddles a major quadrant boundary legitimately spans wide in one
-    # dimension — inherent to slicing any space-filling curve.)
-    avg_sx = sum(sx for sx, _ in zspans) / len(zspans)
-    avg_sy = sum(sy for _, sy in zspans) / len(zspans)
-    assert avg_sx <= 120, avg_sx
-    assert avg_sy <= 120, avg_sy
-    linear_avg_sy = sum(sy for _, sy in linear) / len(linear)
-    assert linear_avg_sy >= 150  # vs the stripe layout it replaces
+    state["v"] = 2
+    assert p.backfill(spark, "daily", "dt = '2024-01-02'") == 1
+    assert p.live_version("daily") == v_before + 1
+    assert rows(p.read_version(spark, "daily", v_before)) == sealed
+    hist = p.history("daily")
+    assert hist[-1]["operation"] == "backfill" and hist[-1]["is_current"]
+    assert hist[-1]["where"] == "dt = '2024-01-02'"
+    assert rows(p.read_table(spark, "daily")) == [
+        ("2024-01-01", 1, 1),
+        ("2024-01-02", 2, 2),
+    ]
 
 
-def test_compact_zorder_guards(spark, tmp_path):
-    import pytest as _pytest
+def test_one_versioned_table_stack_in_the_pipeline():
+    """OPTIMIZE, VACUUM, SHALLOW CLONE, TIMESTAMP AS OF and the full
+    commit history live in the Delta log (``sinks/delta_log.py``) only:
+    the Pipeline keeps no parquet copy of them, no second commit log, and
+    flips no session conf."""
+    import ast
+    import inspect
 
-    from pyspark.sql import functions as F
-
-    p = Pipeline("zg", str(tmp_path / "p"))
-
-    @p.table(name="tbl")
-    def tbl(pl):
-        return spark.range(100).select(
-            F.col("id").alias("x"), F.col("id").alias("y")
-        )
-
-    p.run(spark, targets=["tbl"])
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        p.compact(spark, "tbl", sort_by=["x"], zorder_by=("x", "y"))
-    with _pytest.raises(ValueError, match="2-4 columns"):
-        p.compact(spark, "tbl", zorder_by=("x",))
-
-
-def test_compact_zorder_three_columns(spark, tmp_path):
-    """3-D Morton: the rewrite is a pure relayout (row multiset preserved)
-    and every file bounds ALL THREE dimensions on average."""
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    N, FILES = 32_000, 16
-    p = Pipeline("z3", str(tmp_path / "p"))
-
-    @p.table(name="tbl")
-    def tbl(pl):
-        return spark.range(N).select(
-            (F.col("id") % 128).alias("x"),
-            ((F.col("id") * 48271) % 128).alias("y"),
-            ((F.col("id") * 69621) % 128).alias("z"),
-        )
-
-    p.run(spark, targets=["tbl"])
-    before = sorted(
-        (r.x, r.y, r.z) for r in p.read_table(spark, "tbl").collect()
-    )
-    n_files = p.compact(
-        spark, "tbl", target_rows_per_file=N // FILES,
-        zorder_by=("x", "y", "z"),
-    )
-    assert n_files == FILES
-    after = sorted(
-        (r.x, r.y, r.z) for r in p.read_table(spark, "tbl").collect()
-    )
-    assert after == before
-
-    real = os.path.realpath(p.path("tbl"))
-    spans = {c: [] for c in ("x", "y", "z")}
-    for f in sorted(os.listdir(real)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(real, f)).metadata
-        cols = {md.schema.column(i).path: i for i in range(md.num_columns)}
-        for cname in spans:
-            mn = mx = None
-            for g in range(md.num_row_groups):
-                stc = md.row_group(g).column(cols[cname]).statistics
-                mn = stc.min if mn is None else min(mn, stc.min)
-                mx = stc.max if mx is None else max(mx, stc.max)
-            spans[cname].append(mx - mn + 1)
-    # 16 files over a 128^3 cube: ideal per-file span ~ 128/16^(1/3) ~ 51;
-    # allow boundary-straddling slack, but each dim must stay well under
-    # the full range a 1-D sort would leave on the other two
-    for cname, ss in spans.items():
-        avg = sum(ss) / len(ss)
-        assert avg <= 100, (cname, avg)
+    for gone in (
+        "compact",
+        "vacuum",
+        "commit_log",
+        "read_as_of",
+        "clone_table",
+        "_log_append",
+        "_log_dir",
+        "_log_read_raw",
+    ):
+        assert not hasattr(Pipeline, gone), gone
+    params = inspect.signature(Pipeline.__init__).parameters
+    assert "log_checkpoint_every" not in params
+    with open(graph_mod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    strings = [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    ]
+    assert not [s for s in strings if "__compacting" in s]
+    assert "spark.sql.sources.partitionOverwriteMode" not in strings
+    assert not [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "set"
+        and getattr(n.value, "attr", None) == "conf"
+    ]

@@ -466,105 +466,6 @@ def test_incremental_cc_pipeline_matches_registry(spark, tmp_path, sf_dir):
     assert direct.exceptAll(out).count() == 0
 
 
-def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
-    """Pipeline.compact: a table fragmented into many small files (one per
-    shuffle partition / micro-batch) rewrites into ceil(rows/target) files
-    with identical content, and the sort_by clustering is re-applied."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F2
-
-    from zeta_etl_spark.plans.graph import Pipeline
-
-    base = str(tmp_path / "compactor")
-    p = Pipeline("compactor", base)
-
-    @p.table(name="frag")
-    def frag(pl):
-        # 4 shuffle partitions -> 4+ part files for 1000 rows
-        return (
-            spark.range(1000)
-            .repartition(4)
-            .withColumn("k", F2.col("id") % 7)
-        )
-
-    p.run(spark, targets=["frag"])
-    before = len(_glob.glob(base + "/frag/part-*.parquet"))
-    assert before >= 4
-
-    n_files = p.compact(spark, "frag", target_rows_per_file=600, sort_by=["k"])
-    assert n_files == 2
-    after = len(_glob.glob(base + "/frag/part-*.parquet"))
-    assert after == 2
-    df = spark.read.parquet(base + "/frag")
-    assert df.count() == 1000
-    assert df.select(F2.sum("id")).first()[0] == 999 * 1000 // 2
-    # no leftover side directory
-    import os as _os
-    assert not _os.path.exists(base + "/frag__compacting")
-    # the memoized frame and temp view were refreshed — the pre-compaction
-    # file listing is gone, so these would throw FileNotFoundException
-    # without the invalidation
-    assert p.read("frag").count() == 1000
-    assert spark.sql("SELECT COUNT(*) FROM compactor__frag").first()[0] == 1000
-
-
-def test_compact_preserves_hive_layout_and_rejects_incremental(
-    spark, tmp_path
-):
-    """ADVICE r5: compacting a partition_by table must re-apply the hive
-    layout (a flat rewrite would silently break later dynamic-partition
-    backfills), and compacting an incremental node must be rejected (the
-    rewrite would orphan the streaming sink's _spark_metadata log)."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F2
-
-    from zeta_etl_spark.plans.graph import Pipeline
-
-    base = str(tmp_path / "compact2")
-    p = Pipeline("compact2", base)
-
-    @p.table(name="part_tbl", partition_by=("day",))
-    def part_tbl(pl):
-        return (
-            spark.range(900)
-            .repartition(6)
-            .withColumn("day", F2.col("id") % 3)
-        )
-
-    p.run(spark, targets=["part_tbl"])
-    assert _os.path.isdir(base + "/part_tbl/day=0")
-
-    p.compact(spark, "part_tbl", target_rows_per_file=450)
-    # hive dirs survive; no flat root part files
-    for d in (0, 1, 2):
-        assert _os.path.isdir(base + f"/part_tbl/day={d}")
-    assert _glob.glob(base + "/part_tbl/part-*.parquet") == []
-    df = spark.read.parquet(base + "/part_tbl")
-    assert df.count() == 900
-    assert df.filter("day = 1").count() == 300
-    # a later partition-scoped backfill still works on the compacted table
-    n = p.backfill(spark, "part_tbl", "day = 1")
-    assert n == 300
-    assert spark.read.parquet(base + "/part_tbl").count() == 900
-    # crash-safety: no residual side dirs after a clean compact
-    assert not _os.path.exists(base + "/part_tbl__compacting")
-    assert not _os.path.exists(base + "/part_tbl__old")
-
-    src = str(tmp_path / "c2src")
-    spark.range(10).write.parquet(src)
-
-    @p.table(name="inc_tbl", incremental=True)
-    def inc_tbl(pl):
-        return spark.readStream.schema("id bigint").parquet(src)
-
-    p.run(spark, targets=["inc_tbl"])
-    with pytest.raises(ValueError, match="incremental"):
-        p.compact(spark, "inc_tbl")
-
-
 def test_apply_changes_with_deletes(spark, tmp_path):
     """apply_as_deletes (the DLT delete surface): the latest row per key
     wins; when that winner satisfies the delete condition the key vanishes
@@ -744,11 +645,8 @@ def test_backfill_rewrites_only_matching_partitions(spark, tmp_path):
 
 
 def test_vacuum_and_describe(spark, tmp_path):
-    """Pipeline.vacuum removes only stranded maintenance side dirs;
-    Pipeline.describe lists node metadata + materialization stats without
-    touching data."""
-    import os as _os
-
+    """Pipeline.describe lists node metadata + materialization stats
+    without touching data."""
     from pyspark.sql import functions as F2
 
     from zeta_etl_spark.plans.graph import Pipeline
@@ -767,89 +665,12 @@ def test_vacuum_and_describe(spark, tmp_path):
 
     p.run(spark, targets=["tbl"])
 
-    # simulate a crashed compaction
-    _os.makedirs(base + "/tbl__compacting")
-    _os.makedirs(base + "/tbl__old")
-    removed = p.vacuum()
-    assert sorted(removed) == [base + "/tbl__compacting", base + "/tbl__old"]
-    assert _os.path.exists(base + "/tbl")  # live table untouched
-    assert p.vacuum() == []  # idempotent
-
-    with pytest.raises(KeyError):
-        p.vacuum("nope")
-
     desc = {d["name"]: d for d in p.describe()}
     assert desc["tbl"]["kind"] == "table"
     assert desc["tbl"]["quality"] == "silver"
     assert desc["tbl"]["partition_by"] == ["day"]
     assert desc["tbl"]["materialized"] and desc["tbl"]["bytes"] > 0
     assert desc["vw"]["kind"] == "view" and not desc["vw"]["materialized"]
-
-
-def test_vacuum_refuses_when_live_table_missing(spark, tmp_path):
-    """Review finding: after a mid-swap compact crash the side dirs hold
-    the ONLY copies — vacuum must refuse with recovery instructions, not
-    delete them."""
-    import os as _os
-    import shutil as _shutil
-
-    from zeta_etl_spark.plans.graph import Pipeline
-
-    base = str(tmp_path / "vrc")
-    p = Pipeline("vrc", base)
-
-    @p.table(name="t")
-    def t(pl):
-        return spark.range(10)
-
-    p.run(spark, targets=["t"])
-    # simulate the crash window: live renamed aside, rewrite staged
-    _os.rename(base + "/t", base + "/t__old")
-    _os.makedirs(base + "/t__compacting")
-    with pytest.raises(RuntimeError, match="only copies"):
-        p.vacuum("t")
-    assert _os.path.exists(base + "/t__old")  # data still there
-    # after manual recovery, vacuum proceeds
-    _os.rename(base + "/t__old", base + "/t")
-    removed = p.vacuum("t")
-    assert removed == [base + "/t__compacting"]
-    _shutil.rmtree(base)
-
-
-def test_compact_splits_hot_partition_value(spark, tmp_path):
-    """Review finding: repartition(n, *partition_cols) collapses each hive
-    value to ONE task/file, ignoring target_rows_per_file.  With the salt,
-    a hot value holding many times the target splits into multiple files."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F2
-
-    from zeta_etl_spark.plans.graph import Pipeline
-
-    base = str(tmp_path / "hotc")
-    p = Pipeline("hotc", base)
-
-    @p.table(name="hot", partition_by=("day",))
-    def hot(pl):
-        # day 0 is hot: ids < 9000 plus every third id above -> 9334 rows
-        return spark.range(10000).withColumn(
-            "day", F2.when(F2.col("id") < 9000, 0).otherwise(F2.col("id") % 3)
-        )
-
-    p.run(spark, targets=["hot"])
-    p.compact(spark, "hot", target_rows_per_file=2000)
-    hot_files = _glob.glob(base + "/hot/day=0/part-*.parquet")
-    # 9334 rows / 2000 target -> >= 4 files for the hot value, not one
-    assert len(hot_files) >= 4, hot_files
-    # per-VALUE salting (second review pass): the small values (333 rows
-    # each, far under target) must stay at ONE file, not fragment into
-    # the hot value's salt count
-    for d in (1, 2):
-        cold = _glob.glob(base + f"/hot/day={d}/part-*.parquet")
-        assert len(cold) == 1, (d, cold)
-    df = spark.read.parquet(base + "/hot")
-    assert df.count() == 10000
-    assert df.filter("day = 0").count() == 9334
 
 
 def test_warn_only_expectations_piggyback_on_write(spark, tmp_path, sf_dir):

@@ -690,10 +690,10 @@ def test_tws_sessionizer_matches_legacy(spark, tmp_path):
 
 
 def test_foreach_batch_upsert_with_deletes(spark, tmp_path):
-    """Streaming apply_as_deletes: delete markers remove keys from the
-    reader mirror but persist as tombstones in the versioned state, so a
-    LATE-arriving row older than the delete cannot resurrect the key, while
-    a genuinely newer upsert can."""
+    """Streaming apply_as_deletes: delete markers remove keys from what
+    read_upsert_table returns but persist as tombstones in the Delta state
+    table, so a LATE-arriving row older than the delete cannot resurrect
+    the key, while a genuinely newer upsert can."""
     src = str(tmp_path / "del_src")
     target = str(tmp_path / "del_target")
     ckpt = str(tmp_path / "del_ckpt")
@@ -892,10 +892,10 @@ def test_foreach_batch_topk_leaderboard(spark, tmp_path):
 
 def test_topk_sink_replay_after_crash_is_idempotent(spark, tmp_path):
     """Same crash model as the upsert sink: the stream checkpoint is lost
-    AFTER the pointer committed (crash between data commit and checkpoint
-    write) — the same files replay as batch 0 and the leaderboard must
-    come out byte-identical (the replay hits the current_ver == batch_id
-    heal path and the merge is idempotent)."""
+    AFTER the Delta overwrite committed (crash between data commit and
+    checkpoint write) — the same files replay as batch 0 and the
+    leaderboard must come out byte-identical (the replay folds the batch
+    into the committed state again, and the fold is idempotent)."""
     import shutil
 
     from zeta_etl_spark.sources.json_source import read_json
@@ -920,7 +920,7 @@ def test_topk_sink_replay_after_crash_is_idempotent(spark, tmp_path):
     before = sorted(tuple(r) for r in read_delta(spark, store).collect())
     assert len(before) == 4
 
-    shutil.rmtree(ckpt)  # crash: checkpoint lost, pointer survives
+    shutil.rmtree(ckpt)  # crash: checkpoint lost, Delta commit survives
     run()
     after = sorted(tuple(r) for r in read_delta(spark, store).collect())
     assert after == before
@@ -928,9 +928,9 @@ def test_topk_sink_replay_after_crash_is_idempotent(spark, tmp_path):
 
 def test_upsert_and_topk_heal_paths_absorb_new_files(spark, tmp_path):
     """Review finding: after CHECKPOINT LOSS the replanned batch 0 can
-    contain files the committed version never saw; a heal path that skips
-    the batch would silently drop them.  Both versioned sinks must
-    re-merge — re-delivered rows are idempotent, new rows land."""
+    contain files the committed version never saw; a replay that skipped
+    the batch would silently drop them.  Both Delta-state sinks must fold
+    it again — re-delivered rows are idempotent, new rows land."""
     import shutil
 
     from zeta_etl_spark.sources.json_source import read_json
@@ -948,14 +948,14 @@ def test_upsert_and_topk_heal_paths_absorb_new_files(spark, tmp_path):
     stream = read_json(spark, src, snap, streaming=True)
     foreach_batch_upsert(stream, target, ckpt, keys=["entity"],
                          sequence_by=["seq"], spark=spark)
-    # crash model: checkpoint lost AFTER pointer commit; new file arrives
+    # crash model: checkpoint lost AFTER the Delta commit; new file arrives
     shutil.rmtree(ckpt)
     _write_json(src, [{"entity": "y", "val": 9.0, "seq": 1}], "w2.json")
     stream = read_json(spark, src, snap, streaming=True)
     foreach_batch_upsert(stream, target, ckpt, keys=["entity"],
                          sequence_by=["seq"], spark=spark)
     got = {r["entity"]: r["val"] for r in read_upsert_table(spark, target).collect()}
-    assert got == {"x": 1.0, "y": 9.0}  # y NOT dropped by the heal path
+    assert got == {"x": 1.0, "y": 9.0}  # y NOT dropped by the replay
 
     # ---- topk sink ----
     src2 = str(tmp_path / "ht_src")

@@ -186,52 +186,3 @@ def test_restore_commit_meta_json_on_disk(spark, tmp_path):
     assert meta["operation"] == "restore"
     assert meta["restored_from"] == 1
     assert meta["pipeline"] == "tops"
-
-
-def test_read_as_of_timestamp(spark, tmp_path):
-    """TIMESTAMP AS OF: latest retained generation committed at or before
-    the requested time; same-second ties resolve to the higher version;
-    pre-history timestamps raise with the available range."""
-    p = Pipeline("tops", str(tmp_path / "t"), retain_generations=3)
-
-    @p.table(name="tbl")
-    def tbl(pl):
-        return spark.createDataFrame(V1, "k int, v int, tag string")
-
-    p.run(spark, targets=["tbl"])
-    _overwrite(p, spark, "tbl", V2)
-
-    # rewrite commit stamps to known distinct times (the writer stamps
-    # wall-clock seconds; the test pins them for determinism)
-    gen_root = p.path("tbl") + "__gen"
-    stamps = {1: "2024-03-01T10:00:00Z", 2: "2024-03-01T11:00:00Z"}
-    for v, at in stamps.items():
-        cpath = os.path.join(gen_root, f"v{v:06d}", "_commit.json")
-        with open(cpath) as fh:
-            meta = json.load(fh)
-        meta["committed_at"] = at
-        with open(cpath, "w") as fh:
-            json.dump(meta, fh)
-
-    def ks(df):
-        return sorted((r.k, r.v) for r in df.select("k", "v").collect())
-
-    v1_rows = sorted((k, v) for k, v, _ in V1)
-    v2_rows = sorted((k, v) for k, v, _ in V2)
-    # exact stamp and later-than-last both resolve forward correctly
-    assert ks(p.read_as_of(spark, "tbl", "2024-03-01T10:00:00Z")) == v1_rows
-    assert ks(p.read_as_of(spark, "tbl", "2024-03-01 10:59:59")) == v1_rows
-    assert ks(p.read_as_of(spark, "tbl", "2024-03-01T11:00:00Z")) == v2_rows
-    assert ks(p.read_as_of(spark, "tbl", "2025-01-01T00:00:00Z")) == v2_rows
-    with pytest.raises(ValueError, match="no retained generation"):
-        p.read_as_of(spark, "tbl", "2024-03-01T09:59:59Z")
-
-    # same-second tie: both stamps equal -> the higher generation wins
-    for v in (1, 2):
-        cpath = os.path.join(gen_root, f"v{v:06d}", "_commit.json")
-        with open(cpath) as fh:
-            meta = json.load(fh)
-        meta["committed_at"] = "2024-03-01T12:00:00Z"
-        with open(cpath, "w") as fh:
-            json.dump(meta, fh)
-    assert ks(p.read_as_of(spark, "tbl", "2024-03-01T12:00:00Z")) == v2_rows

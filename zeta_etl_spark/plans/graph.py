@@ -91,34 +91,33 @@ class Node:
 
 
 class Pipeline:
-    """A named DAG of DataFrame-producing nodes with parquet materialization."""
+    """A named DAG of DataFrame-producing nodes with parquet materialization.
+
+    Overwrite tables publish atomic generations with ``history``,
+    ``read_version``, ``restore`` and ``table_changes`` over the retained
+    window.  The other Delta table operations (OPTIMIZE/ZORDER, VACUUM,
+    SHALLOW CLONE, TIMESTAMP AS OF, the full commit history) live in one
+    place, the Delta log: declare the table with ``publish_delta=True`` and
+    call the ``sinks.delta_log`` function on :meth:`delta_path` —
+    ``optimize(spark, p.delta_path(name), zorder_by=...)``, ``vacuum``,
+    ``clone_delta``, ``read_delta(spark, ..., timestamp_ms=...)``,
+    ``delta_history``, ``restore_table``."""
 
     def __init__(
         self,
         name: str,
         base_path: str,
         retain_generations: int = 1,
-        log_checkpoint_every: int = 10,
     ):
         """``retain_generations`` = how many PRIOR sealed generations each
         overwrite table keeps next to the published one (the Delta
         VACUUM-retention knob): 1 (default) guarantees a reader that pinned
         the previous generation mid-publish can finish; larger values
         extend the :meth:`read_version` time-travel window at the cost of
-        storage.
-
-        ``log_checkpoint_every`` = commit-log checkpoint cadence (the Delta
-        ``delta.checkpointInterval`` knob): every N commits the per-commit
-        log entries accumulated so far are folded into one checkpoint file
-        and the consumed entry files deleted, so :meth:`commit_log` reads
-        O(1 checkpoint + tail) files no matter how many commits the table
-        has ever seen."""
+        storage."""
         if retain_generations < 1:
             raise ValueError("retain_generations must be >= 1")
-        if log_checkpoint_every < 1:
-            raise ValueError("log_checkpoint_every must be >= 1")
         self.retain_generations = retain_generations
-        self.log_checkpoint_every = log_checkpoint_every
         self.name = name
         self.base_path = base_path
         self.nodes: dict[str, Node] = {}
@@ -178,7 +177,12 @@ class Pipeline:
         zetadex-transactions-helius-pipeline.py:286-287).  Incremental
         nodes are rejected — a streaming node publishes to Delta through
         ``sinks.delta_log.foreach_batch_delta_append`` instead, which
-        gives exactly-once appends rather than per-run mirrors."""
+        gives exactly-once appends rather than per-run mirrors.  The
+        mirror is how a Pipeline table reaches OPTIMIZE/ZORDER, VACUUM,
+        SHALLOW CLONE, TIMESTAMP AS OF and the full commit history: call
+        ``sinks.delta_log``'s ``optimize``, ``vacuum``, ``clone_delta``,
+        ``read_delta(timestamp_ms=)`` or ``delta_history`` on
+        ``delta_path(name)``."""
 
         def deco(fn):
             n = name or fn.__name__
@@ -303,23 +307,32 @@ class Pipeline:
     ) -> int:
         """Partition-scoped rebuild: re-run the node's function, keep only
         rows matching ``where`` (a SQL predicate over the PARTITION columns
-        only — enforced), and overwrite ONLY the hive partitions those rows
-        land in — untouched partitions keep their existing files
-        byte-for-byte.  The standard warehouse backfill shape (fix one bad
-        day without rewriting a year), built on Spark's dynamic partition
-        overwrite.  Declared data-quality expectations run exactly as in
+        only — enforced), and replace ONLY the hive partitions those rows
+        land in — untouched partitions are hard-linked from the live
+        generation, so they keep their files byte-for-byte.  The standard
+        warehouse backfill shape (fix one bad day without rewriting a
+        year).  Declared data-quality expectations run exactly as in
         ``run()``.
 
-        Returns the number of rows written.  Guards (each a silent-data-loss
-        vector otherwise): the node must be a ``partition_by`` overwrite
-        table (append tables hold accumulated epochs a re-run can't
-        reproduce; incremental tables are streaming sinks whose
-        ``_spark_metadata`` log a batch write would corrupt), and ``where``
-        may reference partition columns only (a row-level predicate would
-        overwrite whole partitions with a row subset).  Downstream nodes'
-        memoized frames are evicted so a later ``read()`` recomputes from
-        the backfilled data; their MATERIALIZED parquet stays stale until
-        re-run — re-run dependents after a backfill."""
+        The result is published like a ``merge_into``: staged in a
+        writer-private dir, sealed with a ``backfill`` commit record and
+        published as a NEW generation with CAS on the generation it read,
+        so the sealed prior generation (and ``read_version`` of it) never
+        changes.
+
+        Returns the number of rows written (0 publishes nothing).  Guards
+        (each a silent-data-loss vector otherwise): the node must be a
+        materialized ``partition_by`` overwrite table (append tables hold
+        accumulated epochs a re-run can't reproduce; incremental tables are
+        streaming sinks whose ``_spark_metadata`` log a batch write would
+        corrupt), and ``where`` may reference partition columns only (a
+        row-level predicate would overwrite whole partitions with a row
+        subset).  Downstream nodes' memoized frames are evicted so a later
+        ``read()`` recomputes from the backfilled data; their MATERIALIZED
+        parquet stays stale until re-run — re-run dependents after a
+        backfill."""
+        from pyspark.sql import functions as F
+
         node = self.nodes[name]
         if node.kind != "table" or not node.partition_by:
             raise ValueError(
@@ -337,250 +350,72 @@ class Pipeline:
                 "accumulate increments a single re-run cannot reproduce; "
                 "re-run the increment itself instead"
             )
+        path = self.path(name)
+        if not os.path.lexists(path):
+            raise ValueError(f"backfill({name!r}): table not materialized")
         # the predicate must resolve against the partition columns ALONE —
         # a predicate on data columns would rewrite whole partitions with a
         # row SUBSET, silently deleting the rest
         self._spark = spark
         df_full = node.fn(self)
-        part_schema = [
-            f for f in df_full.schema.fields if f.name in node.partition_by
-        ]
+        pcols = list(node.partition_by)
+        part_schema = [f for f in df_full.schema.fields if f.name in pcols]
         try:
-            spark.createDataFrame([], schema=type(df_full.schema)(part_schema))                 .filter(where)
+            spark.createDataFrame(
+                [], schema=type(df_full.schema)(part_schema)
+            ).filter(where)
         except Exception as e:  # noqa: BLE001 - analysis error → clear msg
             raise ValueError(
                 f"backfill({name!r}): `where` must reference only the "
-                f"partition columns {list(node.partition_by)}: {e}"
+                f"partition columns {pcols}: {e}"
             ) from e
         df = df_full.filter(where)
         if node.expectations:
             df = self._apply_expectations(node, df)
         if node.sort_within_partitions:
             df = df.sortWithinPartitions(*node.sort_within_partitions)
-        df = df.cache()  # one compute for count + write
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        extra = self._schema_record(node, df)
+        gen_root, _ = self._gen_prepare(path)
+        # pin the generation this backfill links from and commits over
+        cur = os.path.realpath(path)
+        read_ver = self._live_version(path)
+        df = df.cache()  # one compute for the partition counts + write
         try:
-            n = df.count()
-            if n:
-                (
-                    df.write.mode("overwrite")
-                    .partitionBy(*node.partition_by)
-                    .parquet(self.path(name))
-                )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
+            per_part = (
+                df.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
             )
+            n = sum(r["__n"] for r in per_part)
+            if n:
+                touched = [tuple(r[c] for c in pcols) for r in per_part]
+                with self._staging(gen_root) as staged:
+                    df.write.mode("overwrite").partitionBy(*pcols).parquet(
+                        staged
+                    )
+                    self._link_untouched_partitions(
+                        cur, staged, pcols, touched
+                    )
+                    _fault_injection("post_stage")
+                    self._seal_commit_meta(
+                        staged, "backfill", where=where, **extra
+                    )
+                    self._seal_and_publish(
+                        path, gen_root, staged, expect_version=read_ver
+                    )
+        finally:
             df.unpersist()
         # refresh the memoized frame/view with an EXPLICIT schema (an empty
         # table has no part files to infer from), and evict downstream
         # memoized frames so read() recomputes from the new data
         if name in self._done:
-            df_new = spark.read.schema(df.schema).parquet(self.path(name))
+            df_new = spark.read.schema(df.schema).parquet(
+                os.path.realpath(path)
+            )
             df_new.createOrReplaceTempView(f"{self.name}__{name}")
             self._done[name] = df_new
         for other in list(self._done):
             if other != name:
                 del self._done[other]
         return n
-
-    def compact(
-        self,
-        spark: SparkSession,
-        name: str,
-        target_rows_per_file: int = 1_000_000,
-        sort_by: Sequence[str] = (),
-        zorder_by: Sequence[str] = (),
-    ) -> int:
-        """Small-file compaction for a materialized table — the engine's
-        ``OPTIMIZE`` stand-in (the reference relies on
-        ``pipelines.autoOptimize`` Delta table properties,
-        zetadex-transactions-helius-pipeline.py:285; parquet pipelines
-        accumulate a file per micro-batch/partition instead and must compact
-        out of band).  Rewrites the table into ``ceil(rows / target)``
-        files; ``sort_by`` re-applies the z-order stand-in
-        (``sortWithinPartitions``) so compaction preserves data clustering.
-
-        Returns the new file count.  Guards mirror ``backfill``'s:
-        incremental tables are streaming sinks whose ``_spark_metadata``
-        transaction log a rewrite would orphan, and a ``partition_by``
-        table is rewritten WITH ``.partitionBy`` so the hive layout (and
-        downstream partition pruning) survives compaction.  The rewrite
-        goes to a side directory first and swaps in only after success;
-        the swap renames the live table aside before promoting the
-        rewrite, so every crash point leaves either the original or the
-        verified rewrite on disk (the residual ``__old``/``__compacting``
-        dir is cleaned up by the next compact).  That two-rename seam is
-        what a Delta/Iceberg deployment replaces with OPTIMIZE.
-
-        ``zorder_by=(a, b)`` is the real ``OPTIMIZE ... ZORDER BY``
-        (reference table property ``pipelines.autoOptimize.zOrderCols``,
-        zetadex-transactions-helius-pipeline.py:285): both columns are
-        min/max-scaled to 16 bits (one cheap stats aggregate), Morton-
-        interleaved (`operators/reshape.morton_code_sql`), and the rewrite
-        range-partitions + sorts on the code — every output file covers a
-        small RECTANGLE of the (a, b) space instead of a thin full-width
-        stripe, so parquet row-group/file min-max pruning works for
-        filters on EITHER column.  2-4 numeric columns (cast
-        dates/timestamps to epoch first; bit width per dimension shrinks
-        as 62//n); mutually exclusive with ``sort_by``.  NULLs in any
-        column sort into the leading files.
-        """
-        import math
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        from zeta_etl_spark.operators.reshape import morton_code_sql_n
-
-        if zorder_by and sort_by:
-            raise ValueError(
-                f"compact({name!r}): sort_by and zorder_by are mutually "
-                "exclusive (both dictate the intra-file order)"
-            )
-        if zorder_by and not 2 <= len(zorder_by) <= 4:
-            raise ValueError(
-                f"compact({name!r}): zorder_by takes 2-4 columns (beyond 4 "
-                "the interleave gives <16 bits per dimension and clustering "
-                "quality degrades below what plain sorting provides)"
-            )
-        node = self.nodes[name]
-        if node.extra.get("incremental"):
-            raise ValueError(
-                f"compact({name!r}): incremental tables are streaming "
-                "sinks (_spark_metadata log); a batch rewrite would orphan "
-                "the log — stop the stream and migrate instead"
-            )
-        path = self.path(name)
-        df = spark.read.parquet(path)
-        if zorder_by:
-            zcols = list(zorder_by)
-            aggs = [F.count(F.lit(1)).alias("n")]
-            for j, c in enumerate(zcols):
-                aggs.append(F.min(F.col(c).cast("double")).alias(f"mn{j}"))
-                aggs.append(F.max(F.col(c).cast("double")).alias(f"mx{j}"))
-            st = df.agg(*aggs).first()
-            rows = st["n"] or 0
-            n_files = max(1, math.ceil(rows / target_rows_per_file))
-            zbits = min(16, 62 // len(zcols))
-            top = float(2**zbits - 1)
-
-            def _scaled(col: str, mn, mx) -> str:
-                if mn is None or mx is None or mx == mn:
-                    return "0"
-                return (
-                    f"cast(floor((cast({col} as double) - {mn!r}) / "
-                    f"{mx - mn!r} * {top!r}) as bigint)"
-                )
-
-            code = morton_code_sql_n(
-                [
-                    _scaled(c, st[f"mn{j}"], st[f"mx{j}"])
-                    for j, c in enumerate(zcols)
-                ],
-                zbits,
-            )
-            keys = [*node.partition_by, "__zcode"]
-            out = (
-                df.withColumn("__zcode", F.expr(code))
-                .repartitionByRange(n_files, *[F.col(k) for k in keys])
-                .sortWithinPartitions(*keys)
-                .drop("__zcode")
-            )
-        elif node.partition_by:
-            # repartition(n, *cols) alone would hash each partition VALUE
-            # to ONE task — a hot value's 50M rows become one giant file
-            # and target_rows_per_file is ignored (review finding).  Salt
-            # within each value, with a PER-VALUE salt count (a global
-            # count derived from the hottest value would scatter every
-            # small value into that many tiny files — second review
-            # finding): value holding k×target rows spreads over ~k
-            # tasks, a value under target keeps salt 0 and lands in one
-            # file.  One stats scan yields both the total and the join
-            # side; AQE broadcasts the per-value counts when small.
-            from pyspark.sql import functions as F
-
-            cols = list(node.partition_by)
-            counts = df.groupBy(*cols).agg(F.count("*").alias("_cnt"))
-            per_val_files = F.greatest(
-                F.lit(1),
-                F.ceil(F.col("_cnt") / F.lit(target_rows_per_file)).cast(
-                    "int"
-                ),
-            )
-            stats = counts.agg(
-                F.sum("_cnt").alias("rows"),
-                F.sum(per_val_files).alias("n_tasks"),
-            ).first()
-            rows = stats["rows"] or 0
-            n_files = int(stats["n_tasks"] or 1)
-            out = (
-                df.join(counts, cols)
-                .withColumn(
-                    "_compact_salt",
-                    F.pmod(
-                        F.hash(F.monotonically_increasing_id()),
-                        per_val_files,
-                    ),
-                )
-                .repartition(n_files, *cols, "_compact_salt")
-                .drop("_compact_salt", "_cnt")
-            )
-        else:
-            rows = df.count()
-            n_files = max(1, math.ceil(rows / target_rows_per_file))
-            out = df.repartition(n_files)
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
-        if os.path.islink(path):
-            # generation-layout table (atomic overwrite writer): publish the
-            # rewrite as the next sealed generation and swap the pointer —
-            # fully atomic, no no-live-copy window at all
-            gen_root, _ = self._gen_prepare(path)
-            tmp = self._stage_path(gen_root)
-        else:
-            tmp = path + "__compacting"
-            old = path + "__old"
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-        try:
-            writer = out.write.mode("overwrite")
-            if node.partition_by:
-                writer = writer.partitionBy(*node.partition_by)
-            writer.parquet(tmp)
-            # verify the rewrite before touching the live table — an
-            # explicit raise, not assert, so python -O cannot strip the
-            # safety gate
-            rewritten = spark.read.parquet(tmp).count()
-            if rewritten != rows:
-                raise RuntimeError(
-                    f"compact({name!r}): rewrite produced {rewritten} rows, "
-                    f"expected {rows}; original table left untouched"
-                )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)  # clean own staging
-            raise
-        if os.path.islink(path):
-            self._seal_commit_meta(tmp, "compact")
-            self._seal_and_publish(path, gen_root, tmp)
-        else:
-            # crash-safe swap: live → __old, __compacting → live, drop __old.
-            # A crash after the first rename leaves the full original at
-            # __old and the verified rewrite at __compacting — recoverable;
-            # never a window with NO live copy being the only state.
-            os.replace(path, old)
-            os.replace(tmp, path)
-            shutil.rmtree(old)
-        # the pre-compaction DataFrame (and its temp view) points at the
-        # deleted part files — drop the memoized frame and re-register the
-        # view over the new files so later read()/SQL doesn't hit
-        # FileNotFoundException
-        if name in self._done:
-            df_new = spark.read.parquet(path)
-            df_new.createOrReplaceTempView(f"{self.name}__{name}")
-            self._done[name] = df_new
-        return n_files
 
     def merge_into(
         self,
@@ -841,7 +676,7 @@ class Pipeline:
         tuple is NOT in ``touched`` into ``staged``.
 
         Parquet part files are immutable and generation cleanup uses
-        ``rmtree`` (unlink), so hard links are safe: vacuuming the old
+        ``rmtree`` (unlink), so hard links are safe: retiring the old
         generation drops its directory names while the shared inodes live on
         under the new generation.  Comparison happens on UNESCAPED values
         (hive dirs %-escape specials; ``__HIVE_DEFAULT_PARTITION__`` is the
@@ -873,15 +708,6 @@ class Pipeline:
 
         n_linked = 0
 
-        def link_tree(src: str, dst: str) -> None:
-            os.makedirs(dst, exist_ok=True)
-            for entry in os.listdir(src):
-                s, d = os.path.join(src, entry), os.path.join(dst, entry)
-                if os.path.isdir(s):
-                    link_tree(s, d)
-                else:
-                    os.link(s, d)
-
         def rec(cur_dir: str, vals: tuple, depth: int) -> None:
             nonlocal n_linked
             if depth == len(pcols):
@@ -892,10 +718,10 @@ class Pipeline:
                 dst = os.path.join(staged, rel)
                 if os.path.exists(dst):
                     raise RuntimeError(
-                        f"merge link target already staged: {rel} — partition "
+                        f"link target already staged: {rel} — partition "
                         "classification bug, aborting before double data"
                     )
-                link_tree(cur_dir, dst)
+                Pipeline._link_tree(cur_dir, dst)
                 n_linked += 1
                 return
             for entry in sorted(os.listdir(cur_dir)):
@@ -907,86 +733,6 @@ class Pipeline:
 
         rec(prev_gen, (), 0)
         return n_linked
-
-    def vacuum(self, name: str | None = None) -> list[str]:
-        """Remove orphan maintenance directories — the engine's VACUUM
-        stand-in.  Crash-safe operations (``compact``) stage their work in
-        ``{table}__compacting`` / ``{table}__old`` side dirs; a crash can
-        strand those, and they are dead weight once the live table is
-        intact.  That precondition is ENFORCED, not assumed: after a crash
-        in compact's swap window the live dir may be missing and the side
-        dirs hold the ONLY copies of the data — vacuuming then would be
-        permanent data loss, so vacuum refuses with recovery instructions
-        instead (found by review before it could bite).  Scoped to one
-        node or the whole pipeline; returns the removed paths.  Never
-        touches live tables, checkpoints, or streaming ``_spark_metadata``.
-        """
-        import shutil
-
-        import re
-
-        names = [name] if name else list(self.nodes)
-        removed = []
-        for n in names:
-            if n not in self.nodes:
-                raise KeyError(f"unknown node {n!r} in pipeline {self.name}")
-            sides = [
-                self.path(n) + suffix
-                for suffix in ("__compacting", "__old")
-                if os.path.exists(self.path(n) + suffix)
-            ]
-            if sides and not os.path.exists(self.path(n)):
-                raise RuntimeError(
-                    f"vacuum({n!r}): live table missing but maintenance "
-                    f"dirs exist ({sides}) — a compaction crashed "
-                    "mid-swap and these are the only copies of the data. "
-                    f"Recover first: os.replace('{self.path(n)}__old', "
-                    f"'{self.path(n)}') to restore the original (or "
-                    "promote __compacting, the verified rewrite), THEN "
-                    "vacuum."
-                )
-            for side in sides:
-                shutil.rmtree(side)
-                removed.append(side)
-            # generation-layout tables (atomic overwrite writer): heal a
-            # crash between seal and publish (pointer missing → re-link the
-            # newest sealed generation — never data loss, the generations
-            # ARE the data), then drop staging debris and generations
-            # beyond the keep-one-prior retention window
-            gen_root = self.path(n) + "__gen"
-            if os.path.isdir(gen_root):
-                gens = sorted(
-                    d
-                    for d in os.listdir(gen_root)
-                    if re.fullmatch(r"v\d{6}", d)
-                )
-                if gens and not os.path.lexists(self.path(n)):
-                    self._swap_pointer(
-                        self.path(n), os.path.join(gen_root, gens[-1])
-                    )
-                for d in os.listdir(gen_root):
-                    full = os.path.join(gen_root, d)
-                    # explicit VACUUM removes ALL staging debris (even a
-                    # live writer's — same contract as Delta VACUUM with
-                    # writers in flight: don't)
-                    if (
-                        d.endswith("__staging")
-                        or "__staging_" in d
-                        or d.startswith("_ptr__")
-                    ):
-                        if os.path.islink(full) or os.path.isfile(full):
-                            os.remove(full)
-                        else:
-                            shutil.rmtree(full)
-                        removed.append(full)
-                if gens:
-                    current = int(gens[-1][1:])
-                    for d in gens:
-                        if int(d[1:]) < current - self.retain_generations:
-                            full = os.path.join(gen_root, d)
-                            shutil.rmtree(full)
-                            removed.append(full)
-        return removed
 
     def describe(self, spark: SparkSession | None = None) -> list[dict]:
         """Node inventory with materialization stats — the engine's
@@ -1044,9 +790,9 @@ class Pipeline:
     ) -> dict[str, DataFrame]:
         """Execute the DAG (all nodes or the closure of ``targets``).
 
-        Nodes maintained by external writers (clone_table targets,
-        result-cache entries, merge-upsert state, IVM views — registered
-        with ``extra["external_writer"]``) are EXCLUDED from the default
+        Nodes maintained by external writers (result-cache entries,
+        merge-upsert state, IVM views — registered with
+        ``extra["external_writer"]``) are EXCLUDED from the default
         all-nodes run: their sentinel fns exist only to hold table layout
         metadata, and materializing one through run() is an error.  Name
         one explicitly in ``targets`` to get that error on purpose."""
@@ -1124,23 +870,14 @@ class Pipeline:
                 if mode == "overwrite_partitions":
                     # dynamic partition overwrite: replace only the
                     # partitions present in df, keep the rest — idempotent
-                    # under re-runs of the same increment partition
-                    prev = spark.conf.get(
-                        "spark.sql.sources.partitionOverwriteMode"
+                    # under re-runs of the same increment partition.  A
+                    # per-write option, so no session conf is flipped
+                    (
+                        df.write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy(*node.partition_by)
+                        .parquet(self.path(name))
                     )
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                    )
-                    try:
-                        (
-                            df.write.mode("overwrite")
-                            .partitionBy(*node.partition_by)
-                            .parquet(self.path(name))
-                        )
-                    finally:
-                        spark.conf.set(
-                            "spark.sql.sources.partitionOverwriteMode", prev
-                        )
                 elif mode == "overwrite":
                     # two-phase commit: staged generation + atomic pointer
                     # swap — readers never see a torn table (VERDICT r6
@@ -1169,7 +906,7 @@ class Pipeline:
                         self.delta_path(name),
                         mode="overwrite",
                         partition_by=node.partition_by,
-                        checkpoint_interval=self.log_checkpoint_every,
+                        checkpoint_interval=10,  # Delta's default
                     )
                 if obs is not None:
                     counts = obs.get  # filled by the write action above
@@ -1245,25 +982,20 @@ class Pipeline:
         return gen_root, nxt
 
     @staticmethod
-    def _stage_path(gen_root: str) -> str:
-        """Writer-private staging dir: pid (liveness-checked by healing) +
-        uuid (several stagings per process)."""
-        import uuid
-
-        return os.path.join(
-            gen_root, f"__staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        )
-
-    @staticmethod
     @_contextmanager
     def _staging(gen_root: str):
-        """Yield a writer-private staging path; on ANY in-process failure
-        remove it (a failed writer cleans its own debris — pid-liveness
-        healing only covers true process death).  On success the dir has
-        been renamed away by the seal, so the cleanup is a no-op."""
+        """Yield a writer-private staging path — pid (liveness-checked by
+        healing) + uuid (several stagings per process); on ANY in-process
+        failure remove it (a failed writer cleans its own debris —
+        pid-liveness healing only covers true process death).  On success
+        the dir has been renamed away by the seal, so the cleanup is a
+        no-op."""
         import shutil
+        import uuid
 
-        staged = Pipeline._stage_path(gen_root)
+        staged = os.path.join(
+            gen_root, f"__staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
+        )
         try:
             yield staged
         except BaseException:
@@ -1338,154 +1070,7 @@ class Pipeline:
             self._swap_pointer(path, committed)  # phase 2: atomic publish
             _fault_injection("post_publish")
             self._retain_generations(gen_root, nxt)
-            _fault_injection("post_retain")
-            # phase 3: durable commit log — outlives vacuumed generations
-            # (Delta's _delta_log).  A crash between publish and this append
-            # leaves a gap that the NEXT writer's append backfills.
-            self._log_append(gen_root, nxt, committed)
         return nxt
-
-    # --- durable commit log (checkpointed) ---------------------------------
-
-    @staticmethod
-    def _log_dir(gen_root: str) -> str:
-        return os.path.join(gen_root, "_log")
-
-    @classmethod
-    def _log_read_raw(cls, gen_root: str) -> tuple[list[dict], int]:
-        """Load the full logged history: latest checkpoint entries + tail
-        entry files after it.  Returns (entries ascending, version of the
-        latest checkpoint or 0).  Cost: one checkpoint file + the tail —
-        never O(all commits ever)."""
-        import json
-        import re
-
-        log_dir = cls._log_dir(gen_root)
-        if not os.path.isdir(log_dir):
-            return [], 0
-        names = os.listdir(log_dir)
-        ckpts = sorted(
-            int(m.group(1))
-            for n in names
-            if (m := re.fullmatch(r"_checkpoint_(\d{6})\.json", n))
-        )
-        entries: list[dict] = []
-        ckpt_ver = 0
-        if ckpts:
-            ckpt_ver = ckpts[-1]
-            with open(
-                os.path.join(log_dir, f"_checkpoint_{ckpt_ver:06d}.json")
-            ) as fh:
-                entries = json.load(fh)["entries"]
-        tail_vers = sorted(
-            int(m.group(1))
-            for n in names
-            if (m := re.fullmatch(r"(\d{6})\.json", n))
-            and int(m.group(1)) > ckpt_ver
-        )
-        for v in tail_vers:
-            with open(os.path.join(log_dir, f"{v:06d}.json")) as fh:
-                entries.append(json.load(fh))
-        return entries, ckpt_ver
-
-    def _log_append(self, gen_root: str, version: int, committed: str) -> None:
-        """Append this commit's log entry (called INSIDE the commit lock),
-        backfilling entries for any sealed generation a crashed writer
-        published but never logged, then checkpoint + compact the tail when
-        the cadence hits."""
-        import json
-        import re
-        import time
-
-        log_dir = self._log_dir(gen_root)
-        os.makedirs(log_dir, exist_ok=True)
-        entries, ckpt_ver = self._log_read_raw(gen_root)
-        logged = {e["version"] for e in entries}
-
-        def entry_for(v: int) -> dict:
-            gen_dir = os.path.join(gen_root, f"v{v:06d}")
-            meta_path = os.path.join(gen_dir, "_commit.json")
-            meta = {"operation": "unknown"}
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    meta = json.load(fh)
-            n_files = n_bytes = 0
-            for root, _dirs, files in os.walk(gen_dir):
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(root, f))
-            return {
-                "version": v,
-                "logged_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
-                "files": n_files,
-                "bytes": n_bytes,
-                **meta,
-            }
-
-        # backfill: sealed-but-unlogged generations from crashed writers
-        # (only ones still on disk — a vacuumed unlogged gen is gone for
-        # good, the same data loss window Delta closes by writing the log
-        # entry BEFORE the commit is visible; our pointer swap IS the
-        # visibility point, so the log trails it by design)
-        on_disk = sorted(
-            int(d[1:])
-            for d in os.listdir(gen_root)
-            if re.fullmatch(r"v\d{6}", d)
-        )
-        for v in on_disk:
-            if v not in logged and v != version:
-                entries.append(entry_for(v))
-        entries.append(entry_for(version))
-        entries.sort(key=lambda e: e["version"])
-        tmp = os.path.join(log_dir, f"_tmp_{version:06d}.json")
-        if version % self.log_checkpoint_every == 0:
-            # fold everything into one checkpoint, then compact: delete
-            # consumed entry files and superseded checkpoints
-            with open(tmp, "w") as fh:
-                json.dump({"entries": entries}, fh)
-            os.replace(
-                tmp, os.path.join(log_dir, f"_checkpoint_{version:06d}.json")
-            )
-            for n in os.listdir(log_dir):
-                m = re.fullmatch(r"(\d{6})\.json", n)
-                if m and int(m.group(1)) <= version:
-                    os.remove(os.path.join(log_dir, n))
-                mc = re.fullmatch(r"_checkpoint_(\d{6})\.json", n)
-                if mc and int(mc.group(1)) < version:
-                    os.remove(os.path.join(log_dir, n))
-        else:
-            new = [e for e in entries if e["version"] not in logged]
-            for e in new:
-                with open(tmp, "w") as fh:
-                    json.dump(e, fh)
-                os.replace(
-                    tmp, os.path.join(log_dir, f"{e['version']:06d}.json")
-                )
-
-    def commit_log(self, name: str) -> list[dict]:
-        """Full durable commit history of an overwrite table, oldest first —
-        the ``DESCRIBE HISTORY`` that SURVIVES vacuum (:meth:`history` walks
-        retained generation dirs, so its window is ``retain_generations``;
-        this reads the checkpointed log).  Each entry carries
-        ``retained``/``is_current`` so callers can tell which versions
-        :meth:`read_version` can still serve."""
-        path = self.path(name)
-        gen_root = path + "__gen"
-        entries, _ = self._log_read_raw(gen_root)
-        retained = set(self.table_versions(name))
-        current = self._live_version(path)
-        return [
-            {
-                **e,
-                "retained": e["version"] in retained,
-                "is_current": e["version"] == current,
-            }
-            for e in entries
-        ]
 
     def _swap_pointer(self, path: str, committed: str) -> None:
         """Atomically point ``path`` (a symlink) at the committed generation
@@ -1551,45 +1136,6 @@ class Pipeline:
         return spark.read.parquet(
             os.path.join(self.path(name) + "__gen", f"v{version:06d}")
         )
-
-    def read_as_of(
-        self, spark: SparkSession, name: str, timestamp: str
-    ) -> DataFrame:
-        """``TIMESTAMP AS OF`` time travel — the timestamp sibling of
-        :meth:`read_version` (Delta resolves a timestamp against its log;
-        here against each retained generation's ``_commit.json``).
-
-        Resolution is Delta's rule: the LATEST retained generation whose
-        ``committed_at`` is <= the requested timestamp (ties within the
-        1-second commit-stamp granularity resolve to the highest
-        generation number — the later commit).  A timestamp earlier than
-        the oldest retained commit raises with the available range, as
-        does one on a table with no stamped generations.
-
-        ``timestamp`` is an ISO-8601 UTC string (``YYYY-MM-DDTHH:MM:SSZ``
-        or any prefix-comparable form; a trailing ``Z`` is normalized).
-        """
-        ts = timestamp.strip().replace(" ", "T")
-        if not ts.endswith("Z"):
-            ts += "Z"
-        candidates: list[tuple[str, int]] = []
-        stamps: list[str] = []
-        for h in self.history(name):
-            at = h.get("committed_at")
-            if at is None:
-                continue
-            stamps.append(at)
-            if at <= ts:
-                candidates.append((at, h["version"]))
-        if not candidates:
-            raise ValueError(
-                f"read_as_of({name!r}, {timestamp!r}): no retained "
-                f"generation committed at or before that time "
-                f"(available commit stamps: {sorted(stamps)}); earlier "
-                "history was vacuumed or never existed"
-            )
-        version = max(candidates)[1]
-        return self.read_version(spark, name, version)
 
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         """Snapshot-isolated read of a materialized table: resolves the
@@ -1709,92 +1255,6 @@ class Pipeline:
             _fault_injection("post_stage")
             self._seal_commit_meta(staged, operation, **extra)
             return self._seal_and_publish(path, gen_root, staged)
-
-    def clone_table(
-        self,
-        src: str,
-        dst: str,
-        version: int | None = None,
-        partition_by: Sequence[str] = (),
-    ) -> dict:
-        """SHALLOW CLONE: publish ``dst`` as a generation whose data files
-        are hard links of ``src``'s committed generation — zero data copy,
-        metadata cost only (Delta's ``CREATE TABLE ... SHALLOW CLONE``;
-        the reference's dev/test-from-prod workflow on Delta tables).
-
-        ``version`` clones a retained historical generation (time-travel
-        clone); default is the live pointer.  The clone is an independent
-        table afterwards: it evolves, compacts, and vacuums on its own,
-        and hard links mean neither table's retention pass can corrupt the
-        other — unlink only drops a reference, never shared bytes.  The
-        clone's commit record carries ``clone_source``/
-        ``clone_source_version`` provenance for lineage audits.
-        """
-        if src not in self.nodes:
-            raise KeyError(f"clone_table: unknown source table {src!r}")
-        gens = self.table_versions(src)
-        if not gens:
-            raise ValueError(
-                f"clone_table({src!r}): source has no committed generations"
-            )
-        if version is None:
-            version = self.live_version(src)
-        if version not in gens:
-            raise ValueError(
-                f"clone_table({src!r}, version={version}): generation not "
-                f"on disk (available: {gens}); it predates the "
-                f"retain_generations={self.retain_generations} window"
-            )
-        # the clone's on-disk layout IS the source generation's (hard
-        # links) — its declared partition_by must match, or a later
-        # regular overwrite of the clone would silently change layout
-        # (ADVICE r8).  Default to the source's declaration; raise on an
-        # explicit conflict rather than ignore it.
-        src_layout = tuple(self.nodes[src].partition_by)
-        if partition_by and tuple(partition_by) != src_layout:
-            raise ValueError(
-                f"clone_table({src!r} -> {dst!r}): partition_by="
-                f"{tuple(partition_by)} conflicts with the source's hive "
-                f"layout {src_layout} — a shallow clone hard-links the "
-                "source's files, so the clone's layout is the source's; "
-                "re-layout with a regular partitioned write instead"
-            )
-        if dst not in self.nodes:
-
-            def _node(pl):  # materialized only through clone_table
-                raise RuntimeError(
-                    f"table {dst!r} is a clone — rewrite it via clone_table "
-                    "or regular writers, not run()"
-                )
-
-            self.table(name=dst, partition_by=src_layout)(_node)
-            self.nodes[dst].extra["external_writer"] = True
-        elif tuple(self.nodes[dst].partition_by) != src_layout:
-            raise ValueError(
-                f"clone_table({src!r} -> {dst!r}): existing destination "
-                f"declares partition_by={tuple(self.nodes[dst].partition_by)}"
-                f" but the cloned generation's layout is {src_layout}"
-            )
-        src_gen = os.path.join(
-            self.path(src) + "__gen", f"v{version:06d}"
-        )
-        dst_path = self.path(dst)
-        gen_root, _ = self._gen_prepare(dst_path)
-        with self._staging(gen_root) as staged:
-            self._link_tree(src_gen, staged)
-            _fault_injection("post_stage")
-            self._seal_commit_meta(
-                staged,
-                "clone",
-                clone_source=src,
-                clone_source_version=version,
-            )
-            new_gen = self._seal_and_publish(dst_path, gen_root, staged)
-        return {
-            "generation": new_gen,
-            "clone_source": src,
-            "clone_source_version": version,
-        }
 
     def table_changes(
         self,
@@ -1963,15 +1423,7 @@ class Pipeline:
         in-place layouts: their idempotence comes from batch-id partition
         replacement and checkpointed exactly-once sinks instead."""
         path = self.path(node.name)
-        self._check_schema_mode(node, df)
-        extra = dict(commit_extra or {})
-        if (node.extra or {}).get("schema_mode", "none") != "none":
-            # the governed schema is the one the WRITER declared — file
-            # re-inference fails on empty generations and value-types hive
-            # partition dirs (see _check_schema_mode)
-            extra["schema"] = {
-                f.name: f.dataType.simpleString() for f in df.schema.fields
-            }
+        extra = {**(commit_extra or {}), **self._schema_record(node, df)}
         gen_root, _ = self._gen_prepare(path)
         with self._staging(gen_root) as staged:
             writer = df.write.mode("overwrite")
@@ -1981,6 +1433,21 @@ class Pipeline:
             _fault_injection("post_stage")
             self._seal_commit_meta(staged, "overwrite", **extra)
             self._seal_and_publish(path, gen_root, staged)
+
+    def _schema_record(self, node: Node, df: DataFrame) -> dict:
+        """Check ``df`` against the node's ``schema_mode`` and return the
+        commit-record entry that governs the next publish (empty for an
+        ungoverned node).  The governed schema is the one the WRITER
+        declared — file re-inference fails on empty generations and
+        value-types hive partition dirs (see :meth:`_check_schema_mode`)."""
+        self._check_schema_mode(node, df)
+        if (node.extra or {}).get("schema_mode", "none") == "none":
+            return {}
+        return {
+            "schema": {
+                f.name: f.dataType.simpleString() for f in df.schema.fields
+            }
+        }
 
     def _check_schema_mode(self, node: Node, df: DataFrame) -> None:
         """Delta-style schema governance on publish (schema_mode=):

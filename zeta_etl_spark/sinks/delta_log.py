@@ -2905,8 +2905,7 @@ def _zvalue_expr(df: DataFrame, zorder_by: Sequence[str]):
     """A true Z-curve value: each column is scaled to a bucket on its
     [min, max] range (two scalars collected driver-side — the same tiny
     agg every range partitioner does) and the buckets' bits are Morton-
-    interleaved via the shared :func:`morton_code_sql_n` builder (the
-    same code path as ``Pipeline.compact(zorder_by=...)``).  Pure JVM
+    interleaved via the shared :func:`morton_code_sql_n` builder.  Pure JVM
     column arithmetic (whole-stage codegen), no UDF.  NULLs sort to
     bucket 0."""
     from zeta_etl_spark.operators.reshape import morton_code_sql_n

@@ -483,7 +483,7 @@ def foreach_batch_merge_upsert(
     rewrites at most min(k, n_buckets) buckets.  Size ``n_buckets`` so a
     typical batch touches a small fraction (store_rows / bucket should be
     ≫ batch_rows / touched_buckets; more buckets = finer pruning but more
-    small files — pair with ``compact``).
+    small files).
 
     Semantics match foreach_batch_upsert: latest row per key wins, ordered
     by ``sequence_by`` (the batch is pre-deduped with latest_by_keys, which
